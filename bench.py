@@ -14,8 +14,9 @@ deterministic pages corpus (size scaled to the SF), writes it to parquet
 (untimed — it is the *input*), then times extract -> tag -> canon -> link ->
 materialize end-to-end and reports triples/sec.
 
-Scaling mode (north-rule evidence, run via scripts/run_scaling.py which
-spawns one subprocess per parallelism level):
+Scaling mode (north-rule evidence, run via
+``scripts/run_scaling.py --workload kg``, which spawns one subprocess per
+parallelism level):
     python bench.py --kg-only --cores 8  --n-docs 40000
 -> one JSON line with the KG throughput at that core count.
 """
@@ -79,21 +80,6 @@ HEADLINE = [
 ]
 
 
-def _release_query_state(spark) -> None:
-    """Drop cached tables and any localCheckpoint blocks the previous
-    query pinned in executor storage. Without this, checkpoint blocks
-    accumulate across the suite (they are never auto-unpersisted) and
-    later queries run under growing memory pressure/GC — measured as a
-    mid-suite slowdown far beyond single-query timings."""
-    spark.catalog.clearCache()
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist()
-    except Exception:
-        pass  # py4j surface changed — cleanup is best-effort
-
-
 def _sf_of(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -103,6 +89,7 @@ def _sf_of(sf_dir: str) -> float:
 
 
 def run_headline_queries(spark, sf_dir: str) -> dict[str, float]:
+    from ckg_spark.pipeline import release_blocks
     from ckg_spark.queries import CATALOG
 
     timings: dict[str, float] = {}
@@ -119,7 +106,11 @@ def run_headline_queries(spark, sf_dir: str) -> dict[str, float]:
             t0 = time.perf_counter()
             fn(spark, sf_dir).collect()
             best = min(best, time.perf_counter() - t0)
-            _release_query_state(spark)
+            # drop the query's cached tables and localCheckpoint blocks:
+            # they are never auto-unpersisted, and accumulated across the
+            # suite they slow later queries far beyond single-query timings
+            spark.catalog.clearCache()
+            release_blocks(spark)
         timings[name] = round(best, 3)
     return timings
 
@@ -166,14 +157,6 @@ def kg_throughput(
     t0 = time.perf_counter()
     stats = pipe.run(pages=pages)
     elapsed = time.perf_counter() - t0
-    stage_seconds: dict[str, float] = {}
-    metrics_path = os.path.join(workdir, "warehouse", "_metrics.jsonl")
-    if os.path.exists(metrics_path):
-        with open(metrics_path) as f:
-            for line in f:
-                rec = json.loads(line)
-                if rec.get("seconds"):
-                    stage_seconds[rec["stage"]] = rec["seconds"]
     return {
         "n_docs": n_docs,
         "n_triples": stats["n_triples"],
@@ -181,7 +164,7 @@ def kg_throughput(
         "seconds": round(elapsed, 3),
         "triples_per_sec": round(stats["n_triples"] / elapsed, 1),
         "docs_per_sec": round(n_docs / elapsed, 1),
-        "stages": stage_seconds,
+        "stages": {m["stage"]: m["seconds"] for m in pipe.wh.metrics() if "seconds" in m},
     }
 
 

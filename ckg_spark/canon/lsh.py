@@ -17,17 +17,13 @@ for the exact-normalized-match predicate the KG canonicalizer verifies with;
 for fuzzy thresholds the usual (1/b)^(1/r) s-curve applies.
 
 All hashing is deterministic (xxhash64 with literal per-index seeds) —
-no ``Math.random``/wall-clock anywhere. The numpy splitmix/FNV helpers
-remain for the SimHash operator, which needs raw token hashes in Python.
+no ``Math.random``/wall-clock anywhere.
 """
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 
 MINHASH_P = 2147483647  # 2^31 - 1 (Mersenne prime); a_i*x + c_i < 2^62
 
@@ -120,24 +116,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
         (rng.randrange(1, MINHASH_P), rng.randrange(0, MINHASH_P))
         for _ in range(num_hashes)
     ]
-
-
-def _splitmix64(x: np.ndarray) -> np.ndarray:
-    x = (x + np.uint64(0x9E3779B97F4A7C15)) & _MASK
-    x = ((x ^ (x >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)) & _MASK
-    x = ((x ^ (x >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)) & _MASK
-    return x ^ (x >> np.uint64(31))
-
-
-def _token_hashes(tokens: list[str]) -> np.ndarray:
-    # deterministic 64-bit token hashes (FNV-1a over utf-8 bytes)
-    out = np.empty(len(tokens), dtype=np.uint64)
-    for i, t in enumerate(tokens):
-        h = np.uint64(0xCBF29CE484222325)
-        for b in t.encode("utf-8"):
-            h = ((h ^ np.uint64(b)) * np.uint64(0x100000001B3)) & _MASK
-        out[i] = h
-    return out
 
 
 def minhash_signatures(

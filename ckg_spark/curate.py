@@ -29,7 +29,6 @@ tables.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass
 from typing import Any
 
@@ -79,23 +78,6 @@ class CurationPipeline:
         self.wh = Warehouse(warehouse_root)
         self.ckpt = Checkpoints(self.wh)
         self.cfg = cfg or CurationConfig()
-        # wall seconds per stage (snapshot write included) — the scaling
-        # harness reads these to attribute the 1-vs-4-core gap to a stage
-        self.stage_seconds: dict[str, float] = {}
-
-    def _stage(self, name, fp, table, compute):
-        t0 = time.perf_counter()
-        # tag every job with the curation stage so event logs / the UI can
-        # attribute task time to a stage (the scaling harness reads this).
-        # Stage-pinned checkpoint blocks are released by run_stage itself
-        # (shared with KGPipeline) once the snapshot commits.
-        self.spark.sparkContext.setJobGroup(name, name)
-        try:
-            out = run_stage(self.spark, self.wh, self.ckpt, name, fp, table, compute)
-        finally:
-            self.spark.sparkContext.setJobGroup("", "")
-        self.stage_seconds[name] = round(time.perf_counter() - t0, 3)
-        return out
 
     def run(
         self,
@@ -129,10 +111,14 @@ class CurationPipeline:
             )
         stats: dict[str, Any] = {"skipped": [], "rows": {}}
 
-        def record(name: str, df: DataFrame, skipped: bool) -> DataFrame:
+        def stage(key: str, name: str, fp: str, table: str, compute) -> DataFrame:
+            # rows come from the committed snapshot's manifest: no count job
+            df, skipped, rows = run_stage(
+                self.spark, self.wh, self.ckpt, name, fp, table, compute
+            )
             if skipped:
-                stats["skipped"].append(name)
-            stats["rows"][name] = df.count()
+                stats["skipped"].append(key)
+            stats["rows"][key] = rows
             return df
 
         # root fingerprint carries the INPUT's identity but no config:
@@ -146,13 +132,10 @@ class CurationPipeline:
             from .extract.urls import dedup_by_canonical_url
 
             fp_url = _fingerprint("curate_url_dedup", {}, fp0)
-            df, sk = self._stage(
-                "curate_url_dedup",
-                fp_url,
-                "cur_url_dedup",
+            df = stage(
+                "url_dedup", "curate_url_dedup", fp_url, "cur_url_dedup",
                 lambda: (dedup_by_canonical_url(docs), None),
             )
-            df = record("url_dedup", df, sk)
             fp_prev = fp_url
         else:
             df, fp_prev = docs, fp0
@@ -179,8 +162,7 @@ class CurationPipeline:
             return df.join(losers, "doc_id", "left_anti"), None
 
         fp_ex = _fingerprint("curate_exact_dedup", {}, fp_prev)
-        df, sk = self._stage("curate_exact_dedup", fp_ex, "cur_exact_dedup", _exact)
-        df = record("exact_dedup", df, sk)
+        df = stage("exact_dedup", "curate_exact_dedup", fp_ex, "cur_exact_dedup", _exact)
 
         # 3. PII scrub FIRST (the regexes need raw punctuation; the
         # token-window span rebuild below is lossy normalization — it
@@ -202,8 +184,7 @@ class CurationPipeline:
             )
 
         fp_pii = _fingerprint("curate_pii", {}, fp_ex)
-        df, sk = self._stage("curate_pii", fp_pii, "cur_pii", _pii)
-        df = record("pii_scrub", df, sk)
+        df = stage("pii_scrub", "curate_pii", fp_pii, "cur_pii", _pii)
 
         # 4. repeated-span removal (text REWRITTEN from surviving token
         # windows — a lossy, lowercased normalization by construction)
@@ -229,8 +210,7 @@ class CurationPipeline:
             {"window": cfg.span_window, "min_repeats": cfg.span_min_repeats},
             fp_pii,
         )
-        df, sk = self._stage("curate_span_dedup", fp_sp, "cur_span_dedup", _span)
-        df = record("span_dedup", df, sk)
+        df = stage("span_dedup", "curate_span_dedup", fp_sp, "cur_span_dedup", _span)
 
         # 5. heuristic quality gate: language, length, quality score —
         # single-tokenization shape (with_quality_stats): the Column-per-stat
@@ -266,8 +246,7 @@ class CurationPipeline:
             {"lang": cfg.lang, "min_tokens": cfg.min_tokens, "min_q": cfg.min_quality},
             fp_sp,
         )
-        df, sk = self._stage("curate_quality", fp_q, "cur_quality", _quality)
-        df = record("quality_filter", df, sk)
+        df = stage("quality_filter", "curate_quality", fp_q, "cur_quality", _quality)
 
         # 6. LM perplexity filter (drop the configured tercile). LEFT
         # join: the LM tokenizer is Latin-script (ops/lm.TOKEN_RE) — a doc
@@ -294,8 +273,7 @@ class CurationPipeline:
                     None,
                 )
 
-            df, sk = self._stage("curate_lm", fp_lm, "cur_lm", _lm)
-            df = record("lm_filter", df, sk)
+            df = stage("lm_filter", "curate_lm", fp_lm, "cur_lm", _lm)
 
         # 7. near-dup dedup: MinHash-LSH pairs -> clusters -> keep min id
         def _neardup():
@@ -326,8 +304,7 @@ class CurationPipeline:
             return df.join(losers, "doc_id", "left_anti"), None
 
         fp_nd = _fingerprint("curate_neardup", {"j": cfg.neardup_jaccard}, fp_lm)
-        df, sk = self._stage("curate_neardup", fp_nd, "cur_neardup", _neardup)
-        df = record("neardup_dedup", df, sk)
+        df = stage("neardup_dedup", "curate_neardup", fp_nd, "cur_neardup", _neardup)
         fp_prev2 = fp_nd
 
         # 7b. decontamination screen (optional): drop documents leaking
@@ -357,8 +334,7 @@ class CurationPipeline:
                 },
                 fp_prev2,
             )
-            df, sk = self._stage("curate_contam", fp_ct, "cur_contam", _contam)
-            df = record("contamination_screen", df, sk)
+            df = stage("contamination_screen", "curate_contam", fp_ct, "cur_contam", _contam)
             fp_prev2 = fp_ct
 
         # 7c. DSIR selection (optional): keep the k documents most like
@@ -388,8 +364,7 @@ class CurationPipeline:
                 },
                 fp_prev2,
             )
-            df, sk = self._stage("curate_dsir", fp_ds, "cur_dsir", _dsir)
-            df = record("dsir_select", df, sk)
+            df = stage("dsir_select", "curate_dsir", fp_ds, "cur_dsir", _dsir)
             fp_prev2 = fp_ds
 
         # 8. deterministic split + sequence packing of the train slice
@@ -418,8 +393,6 @@ class CurationPipeline:
             },
             fp_prev2,
         )
-        df, sk = self._stage("curate_split_pack", fp_fin, "curated_documents", _split_pack)
-        df = record("split_pack", df, sk)
+        stage("split_pack", "curate_split_pack", fp_fin, "curated_documents", _split_pack)
         stats["n_curated"] = stats["rows"]["split_pack"]
-        stats["stage_seconds"] = dict(self.stage_seconds)
         return stats

@@ -28,9 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_NODE_COLS = ("node_id", "node_type", "parent")
-_EDGE_COLS = ("subj", "pred", "obj", "weight")
-
 
 def _empty_nodes(spark) -> DataFrame:
     return spark.createDataFrame([], "node_id string, node_type string, parent string")

@@ -219,8 +219,8 @@ def materialize_graph(
         "nodes_snapshot": nodes_t.current_snapshot(),
         "edges_snapshot": edges_t.current_snapshot(),
         "orphan_edges": n_orphan,
-        # same key the run_stage timer uses, so bench.py's per-stage table
-        # (and run_scaling's speedup table) pick materialize up too
+        # same key the run_stage timer uses, so per-stage tables read from
+        # the metrics journal pick materialize up too
         "seconds": round(time.perf_counter() - t0, 3),
     }
     wh.log_metric("materialize", **stats)

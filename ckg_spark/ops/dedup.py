@@ -565,6 +565,10 @@ def remove_repeated_spans(
         # plants an Expand that doubles every row through this
         # corpus-scale aggregation (measured +20% on the span stage).
         F.max(F.col("idx")).alias("_maxidx"),
+        # ...except when one copy has ZERO spans: its sentinel row adds
+        # nothing to count(idx) or max(idx). Each doc contributes exactly
+        # greatest(n, 1) rows, so a row count above that exposes it.
+        F.count(F.lit(1)).alias("_nrows"),
     )
     # Reconstruction: rebuild each document from its carried token/line
     # array and the kept-index list — the one exchange that moves text.
@@ -573,7 +577,8 @@ def remove_repeated_spans(
     # clean_text — fail loudly instead (the round-4 rid lesson: assumed-
     # unique ids do occur in real inputs).
     dup_guarded_keep = F.when(
-        F.col("n_spans") == F.coalesce(F.col("_maxidx") + 1, F.lit(0)),
+        (F.col("n_spans") == F.coalesce(F.col("_maxidx") + 1, F.lit(0)))
+        & (F.col("_nrows") == F.greatest(F.col("n_spans"), F.lit(1))),
         F.col("_keep"),
     ).otherwise(
         F.raise_error(

@@ -47,15 +47,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
 
-def l2norm_lens(cols: list[str]) -> Column:
-    """The reference's second lens (``projection='l2norm'``)."""
-    s = None
-    for c in cols:
-        t = F.col(c).cast("double") * F.col(c).cast("double")
-        s = t if s is None else s + t
-    return F.sqrt(s)
-
-
 def _cube_range(lens: Column, mn: Column, mx: Column, n_cubes: int, overlap: float):
     """(lo, hi) inclusive cube-index bounds for one lens value (cover
     spec in the module docstring). Degenerate range (mn == mx) puts

@@ -37,14 +37,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", StructType([]), True),
-    ]
-)
-
 FEATURE_DIM = 16
 
 FEATURES_SCHEMA = StructType(

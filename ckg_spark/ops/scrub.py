@@ -40,16 +40,6 @@ PHONE_RE = (
     r"|\b0[0-9]{9,14}\b"
 )
 
-_PASSES = [(EMAIL_RE, "<EMAIL>"), (IPV4_RE, "<IP>"), (PHONE_RE, "<PHONE>")]
-
-
-def scrub_text(text: Column) -> Column:
-    out = text
-    for pat, token in _PASSES:
-        out = F.regexp_replace(out, pat, token)
-    return out
-
-
 def pii_columns(text: Column) -> dict[str, Column]:
     """The scrub as plain Columns — (clean_text, n_emails, n_ips,
     n_phones) — so callers carrying other columns (curate's PII stage)

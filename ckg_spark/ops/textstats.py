@@ -46,17 +46,6 @@ def token_count(text_col: Column) -> Column:
     return F.size(tokens_col(text_col))
 
 
-def bpe_ish_token_count(text_col: Column) -> Column:
-    """Sub-word-ish token estimate: count of alphanumeric runs + punctuation
-    marks (a deterministic regex proxy for BPE token counts)."""
-    return F.size(
-        F.filter(
-            F.split(text_col, r"(?=[^A-Za-z0-9])|(?<=[^A-Za-z0-9])"),
-            lambda t: F.trim(t) != F.lit(""),
-        )
-    )
-
-
 def stopword_ratio(text_col: Column, lang: str | None = "en") -> Column:
     words = stopword_profile(lang)
     toks = tokens_col(text_col)

@@ -53,10 +53,6 @@ def _int_pow(col: Column, power: int) -> Column:
     return out
 
 
-def _int_pow_sql(expr: str, power: int) -> str:
-    return " * ".join([f"({expr})"] * power)
-
-
 def wgcna_adjacency(
     df: DataFrame,
     sample_col: str,

@@ -26,6 +26,9 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import time
+from collections.abc import Collection
+from contextlib import contextmanager
 from dataclasses import asdict
 from typing import Any
 
@@ -72,11 +75,42 @@ def _input_identity(df: DataFrame) -> dict:
 def _pinned_rdds(spark: SparkSession) -> dict:
     """id -> JavaRDD of every block pinned in executor storage (cache /
     localCheckpoint). Best-effort: empty on a py4j surface change, which
-    just disables the stage-scoped release."""
+    just disables the release."""
     try:
         return dict(spark.sparkContext._jsc.getPersistentRDDs())
     except Exception:
         return {}
+
+
+def release_blocks(spark: SparkSession, keep: Collection[int] = ()) -> None:
+    """Unpersist every block pinned in executor storage except the RDD ids
+    in ``keep``. localCheckpoint blocks are never auto-unpersisted, so a
+    session running several builds, pipelines or queries accumulates
+    corpus-sized blocks for its lifetime unless someone drops them."""
+    for rid, jrdd in _pinned_rdds(spark).items():
+        if rid not in keep:
+            try:
+                jrdd.unpersist()
+            except Exception:
+                pass
+
+
+@contextmanager
+def stage_tag(spark: SparkSession, name: str):
+    """Tag every Spark job started inside with ``ckg-stage-<name>``. A job
+    tag, not a job group: a caller's enclosing group stays on the jobs."""
+    sc = spark.sparkContext
+    tag = f"ckg-stage-{name}"
+    sc.addJobTag(tag)
+    try:
+        yield
+    finally:
+        sc.removeJobTag(tag)
+
+
+class RowCountUnavailable(RuntimeError):
+    """A committed data file's parquet footer could not be read, so the
+    snapshot's row count is unknown (a manifest sum would read it as 0)."""
 
 
 class Checkpoints:
@@ -110,43 +144,45 @@ def run_stage(
     fp: str,
     table: str,
     compute,
-) -> tuple[DataFrame, bool]:
+) -> tuple[DataFrame, bool, int]:
     """Shared stage executor (KGPipeline + curate.CurationPipeline):
     skip when the fingerprint matches and the output snapshot exists,
     otherwise run, commit the snapshot, log the metrics row, and mark
-    the checkpoint. Returns (output df, was_skipped)."""
+    the checkpoint. Every Spark job of the stage carries the stage's job
+    tag (``stage_tag``). Returns (output df, was_skipped, rows), the row
+    count coming from the snapshot's manifest — no Spark job."""
     t = wh.table(table)
-    rec = ckpt.done(name, fp)
-    if rec is not None and t.exists():
-        return t.read(spark, rec.get("snapshot")), True
-    import time as _time
-
-    t0 = _time.perf_counter()
-    before = set(_pinned_rdds(spark))
-    try:
-        df, partition_by = compute()
-        snap = t.overwrite(df, partition_by=partition_by, meta={"stage": name, "fp": fp})
-    finally:
-        # release every block the stage pinned (link's per_url frame,
-        # canon/MinHash signature pins, LM scored frames): the snapshot is
-        # committed and the caller gets a fresh read of it, so nothing
-        # references them — and localCheckpoint blocks are never
-        # auto-unpersisted, so a session running several builds/pipelines
-        # would otherwise accumulate corpus-sized blocks for its lifetime.
-        # Blocks pinned BEFORE the stage (caller-owned frames) are kept.
-        for rid, jrdd in _pinned_rdds(spark).items():
-            if rid not in before:
-                try:
-                    jrdd.unpersist()
-                except Exception:
-                    pass
-    elapsed = round(_time.perf_counter() - t0, 3)
-    rows = sum(f["rows"] or 0 for f in t.snapshots()[-1].files)
-    wh.log_metric(
-        name, table=table, snapshot=snap, rows=rows, fingerprint=fp, seconds=elapsed
-    )
-    ckpt.mark(name, fp, snapshot=snap, table=table)
-    return t.read(spark, snap), False
+    with stage_tag(spark, name):
+        rec = ckpt.done(name, fp)
+        if rec is not None and t.exists():
+            snap = rec.get("snapshot")
+            return t.read(spark, snap), True, t.row_count(snap)
+        t0 = time.perf_counter()
+        before = set(_pinned_rdds(spark))
+        try:
+            df, partition_by = compute()
+            snap = t.overwrite(df, partition_by=partition_by, meta={"stage": name, "fp": fp})
+        finally:
+            # the snapshot is committed and the caller gets a fresh read of
+            # it, so nothing references the blocks the stage pinned (link's
+            # per_url frame, canon/MinHash signature pins, LM scored
+            # frames). Blocks pinned BEFORE the stage (caller-owned frames)
+            # are kept.
+            release_blocks(spark, keep=before)
+        elapsed = round(time.perf_counter() - t0, 3)
+        files = t.snapshots()[-1].files
+        unread = [f["file"] for f in files if f["rows"] is None]
+        if unread:
+            raise RowCountUnavailable(
+                f"stage {name}: no row count for {len(unread)} file(s) of table "
+                f"{table} snapshot {snap}, e.g. {unread[0]}"
+            )
+        rows = sum(f["rows"] for f in files)
+        wh.log_metric(
+            name, table=table, snapshot=snap, rows=rows, fingerprint=fp, seconds=elapsed
+        )
+        ckpt.mark(name, fp, snapshot=snap, table=table)
+        return t.read(spark, snap), False, rows
 
 
 class KGPipeline:
@@ -182,11 +218,6 @@ class KGPipeline:
         # None keeps every pair (the P/R-gated default)
         self.comention_min_score = comention_min_score
 
-    # -- stages -----------------------------------------------------------
-    def _stage(self, name: str, fp: str, table: str, compute) -> tuple[DataFrame, bool]:
-        """Run or skip a stage; returns (output df, was_skipped)."""
-        return run_stage(self.spark, self.wh, self.ckpt, name, fp, table, compute)
-
     def run(self, pages: DataFrame | None = None) -> dict:
         spark = self.spark
         stats: dict[str, Any] = {"skipped": []}
@@ -203,8 +234,9 @@ class KGPipeline:
         # downstream instead of silently reusing the old mentions.
         if pages is None:
             fp_pages = _fingerprint("pages", asdict(self.pages_cfg))
-            pages, skipped = self._stage(
-                "pages", fp_pages, "pages", lambda: (generate_pages_df(spark, self.pages_cfg), None)
+            pages, skipped, _ = run_stage(
+                spark, self.wh, self.ckpt, "pages", fp_pages, "pages",
+                lambda: (generate_pages_df(spark, self.pages_cfg), None),
             )
             if skipped:
                 stats["skipped"].append("pages")
@@ -220,10 +252,8 @@ class KGPipeline:
         # snapshot (its own resume point) and tag reads from it.
         if self.materialize_text:
             fp_ext = _fingerprint("extract", {}, fp_pages)
-            pages_text, skipped = self._stage(
-                "extract",
-                fp_ext,
-                "pages_text",
+            pages_text, skipped, _ = run_stage(
+                spark, self.wh, self.ckpt, "extract", fp_ext, "pages_text",
                 lambda: (
                     with_extracted_text(pages).select("url", "warc_ts", "text", "lang"),
                     None,
@@ -252,16 +282,16 @@ class KGPipeline:
                 return tag_mentions(tag_input, ac_bc, blocklist=blocklist), None
             return tag_pages_fused(tag_input, ac_bc, blocklist=blocklist), None
 
-        mentions, skipped = self._stage("tag", fp_tag, "mentions", _tag)
+        mentions, skipped, _ = run_stage(
+            spark, self.wh, self.ckpt, "tag", fp_tag, "mentions", _tag
+        )
         if skipped:
             stats["skipped"].append("tag")
 
         # stage 4: canonicalization (LSH blocking + CC)
         fp_canon = _fingerprint("canon", {"mode": self.canon_mode, "vocab": asdict(self.vocab_cfg)})
-        cmap, skipped = self._stage(
-            "canon",
-            fp_canon,
-            "canonical_map",
+        cmap, skipped, _ = run_stage(
+            spark, self.wh, self.ckpt, "canon", fp_canon, "canonical_map",
             lambda: (build_canonical_map(terms, mode=self.canon_mode), None),
         )
         if skipped:
@@ -271,10 +301,8 @@ class KGPipeline:
         fp_link = _fingerprint(
             "link", {"comention_min_score": self.comention_min_score}, fp_tag, fp_canon
         )
-        triples, skipped = self._stage(
-            "link",
-            fp_link,
-            "triples",
+        triples, skipped, n_staged = run_stage(
+            spark, self.wh, self.ckpt, "link", fp_link, "triples",
             lambda: (
                 all_triples(
                     mentions, terms, cmap,
@@ -295,17 +323,18 @@ class KGPipeline:
         ):
             stats["skipped"].append("materialize")
         else:
-            mention_urls = triples.filter("pred = 'MENTIONED_IN_PUBLICATION'").select(
-                triples["obj"].alias("url")
-            )
-            nodes = build_nodes(terms, cmap, mention_urls=mention_urls)
-            # staged-edge count is free from the triples manifest; it arms
-            # materialize_graph's zero-orphan shortcut (skip the second
-            # corpus-scale FK scan when the merge manifest proves no orphans)
-            mat_stats = materialize_graph(
-                spark, self.wh, nodes, triples,
-                total_edges=self.wh.table("triples").row_count(),
-            )
+            with stage_tag(spark, "materialize"):
+                mention_urls = triples.filter("pred = 'MENTIONED_IN_PUBLICATION'").select(
+                    triples["obj"].alias("url")
+                )
+                nodes = build_nodes(terms, cmap, mention_urls=mention_urls)
+                # staged-edge count is free from the triples manifest; it
+                # arms materialize_graph's zero-orphan shortcut (skip the
+                # second corpus-scale FK scan when the merge manifest
+                # proves no orphans)
+                mat_stats = materialize_graph(
+                    spark, self.wh, nodes, triples, total_edges=n_staged
+                )
             stats.update(mat_stats)
             self.ckpt.mark("materialize", fp_mat, **mat_stats)
 

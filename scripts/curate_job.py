@@ -73,7 +73,8 @@ def main() -> None:
         ).selectExpr("sum(x)").collect()
     n_input = docs.count()
     t0 = time.perf_counter()
-    stats = CurationPipeline(spark, args.warehouse, cfg).run(
+    pipe = CurationPipeline(spark, args.warehouse, cfg)
+    stats = pipe.run(
         docs,
         eval_docs=spark.read.parquet(args.eval_docs) if args.eval_docs else None,
         dsir_target=spark.read.parquet(args.dsir_target) if args.dsir_target else None,
@@ -82,6 +83,7 @@ def main() -> None:
     stats["n_input"] = n_input
     stats["seconds"] = round(elapsed, 3)
     stats["docs_per_sec"] = round(n_input / elapsed, 1)
+    stats["stages"] = {m["stage"]: m["seconds"] for m in pipe.wh.metrics() if "seconds" in m}
     print(json.dumps(stats))
     spark.stop()
 

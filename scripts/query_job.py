@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Child worker for run_query_scaling.py: run ONE catalog query in a
-fresh pinned JVM and print one JSON line with the timed execution.
+"""Child worker for ``run_scaling.py --workload query``: run ONE catalog
+query in a fresh pinned JVM and print one JSON line with the timed
+execution.
 
 Timing covers the query's full computation via the noop sink (forces
 every output column — a count() could let Catalyst prune the expensive
@@ -43,7 +44,7 @@ def main() -> None:
     rows = df.count()
     print(json.dumps(
         {"query": args.query, "cores": args.cores, "seconds": seconds,
-         "rows": rows}
+         "rows": rows, "sf_dir": args.sf_dir}
     ))
     spark.stop()
 

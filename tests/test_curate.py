@@ -78,6 +78,16 @@ def test_curation_end_to_end(spark, tmp_path, cfg):
         "curate_exact_dedup", "curate_span_dedup", "curate_pii",
         "curate_quality", "curate_neardup", "curate_split_pack",
     } <= names
+    # stats rows come from the manifests: each equals a scan of the
+    # stage's committed table
+    tables = {
+        "exact_dedup": "cur_exact_dedup", "pii_scrub": "cur_pii",
+        "span_dedup": "cur_span_dedup", "quality_filter": "cur_quality",
+        "neardup_dedup": "cur_neardup", "split_pack": "curated_documents",
+    }
+    assert set(stats["rows"]) == set(tables)
+    for key, table in tables.items():
+        assert stats["rows"][key] == wh.table(table).read(spark).count(), key
 
 
 def test_curation_resume_skips_all_stages(spark, tmp_path, cfg):

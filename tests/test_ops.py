@@ -113,6 +113,23 @@ def test_remove_repeated_spans_duplicate_ids_fail_loudly(spark):
     assert rows["d1"]["n_removed"] == 1
 
 
+@pytest.mark.parametrize("mode", ["lines", "token_windows"])
+def test_remove_repeated_spans_duplicate_id_with_empty_copy_fails(spark, mode):
+    """A duplicate id whose copy has ZERO spans adds only a sentinel row
+    (idx null), which neither count(idx) nor max(idx) sees — the guard
+    must still raise instead of emitting one output row per copy."""
+    from pyspark.errors import PySparkException
+
+    docs = spark.createDataFrame(
+        [("d1", ""), ("d1", "alpha beta\ngamma delta\nepsilon"), ("d2", "zeta")],
+        ["doc_id", "text"],
+    )
+    with pytest.raises(PySparkException):
+        dedup.remove_repeated_spans(
+            docs, "text", "doc_id", mode=mode, window=2, min_repeats=2
+        ).collect()
+
+
 def test_assign_cells_accepts_string_ids(spark, emb):
     """r5 review: the split_u quantizer seeding must not narrow the
     accepted id domain — string/UUID keys route through the portable

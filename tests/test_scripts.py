@@ -1,0 +1,34 @@
+"""Every script under scripts/ compiles, and its ckg_spark imports resolve,
+so a merged or deleted script or helper cannot leave a broken one behind."""
+
+from __future__ import annotations
+
+import ast
+import glob
+import importlib
+import importlib.util
+import os
+import py_compile
+
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SCRIPTS = sorted(glob.glob(os.path.join(REPO, "scripts", "*.py")))
+
+
+@pytest.mark.parametrize("path", SCRIPTS, ids=os.path.basename)
+def test_script_compiles_and_imports_resolve(path, tmp_path):
+    py_compile.compile(path, cfile=str(tmp_path / "out.pyc"), doraise=True)
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and (node.module or "").startswith("ckg_spark"):
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                assert hasattr(mod, alias.name) or importlib.util.find_spec(
+                    f"{node.module}.{alias.name}"
+                ), f"{path}: {node.module}.{alias.name}"
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.startswith("ckg_spark"):
+                    importlib.import_module(alias.name)
