@@ -1,4 +1,4 @@
-"""End-to-end training-corpus curation pipeline (checkpoint-resumable).
+"""End-to-end training-corpus curation pipeline (resumable per stage).
 
 Composes the engine's curation operators into the stage DAG a production
 web-corpus pipeline runs (the CCNet/C4/RefinedWeb order: cheap exact
@@ -43,7 +43,7 @@ from .ops.dedup import exact_dup_groups, minhash_dup_candidates, remove_repeated
 from .ops.dsir import dsir_select, importance_weights
 from .ops.scrub import pii_columns
 from .ops.textstats import quality_keep, with_quality_stats
-from .pipeline import Checkpoints, _fingerprint, _input_identity, run_stage
+from .pipeline import _fingerprint, _input_identity, run_stage
 
 
 @dataclass
@@ -76,7 +76,6 @@ class CurationPipeline:
     ):
         self.spark = spark
         self.wh = Warehouse(warehouse_root)
-        self.ckpt = Checkpoints(self.wh)
         self.cfg = cfg or CurationConfig()
 
     def run(
@@ -113,9 +112,7 @@ class CurationPipeline:
 
         def stage(key: str, name: str, fp: str, table: str, compute) -> DataFrame:
             # rows come from the committed snapshot's manifest: no count job
-            df, skipped, rows = run_stage(
-                self.spark, self.wh, self.ckpt, name, fp, table, compute
-            )
+            df, skipped, rows = run_stage(self.spark, self.wh, table, name, fp, compute)
             if skipped:
                 stats["skipped"].append(key)
             stats["rows"][key] = rows

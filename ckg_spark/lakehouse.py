@@ -39,6 +39,11 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 
+class RowCountUnavailable(RuntimeError):
+    """A just-written data file's parquet footer could not be read, so the
+    snapshot's row count is unknown (a manifest sum would read it as 0)."""
+
+
 @dataclass
 class Snapshot:
     id: int
@@ -82,18 +87,19 @@ class Table:
         return [Snapshot(**s) for s in self._load()["snapshots"]]
 
     def row_count(self, snapshot_id: int | None = None) -> int:
-        """Total rows at a snapshot from the manifest footers — no Spark job.
-        (Manifest-based stats ≙ Iceberg's snapshot summary counts.)"""
+        """Total rows at a snapshot from the manifest alone — no footer
+        reads, no Spark job (≙ Iceberg's snapshot summary counts). Each data
+        dir is written by exactly one snapshot, whose ``rows_written`` is
+        that dir's row count; a snapshot's total sums the dirs it lists."""
         m = self._load()
         sid = m["current"] if snapshot_id is None else snapshot_id
-        snaps = {s["id"]: s for s in m["snapshots"]}
-        if sid == 0 or sid not in snaps:
-            return 0
-        total = 0
-        for rel in snaps[sid]["dirs"]:
-            for f in _walk_row_counts(os.path.join(self.root, rel)):
-                total += f["rows"] or 0
-        return total
+        dir_rows: dict[str, int] = {}
+        for s in m["snapshots"]:
+            new = [d for d in s["dirs"] if d not in dir_rows]
+            dir_rows.update((d, s["rows_written"]) for d in new)
+            if s["id"] == sid:
+                return sum(dir_rows[d] for d in s["dirs"])
+        return 0
 
     # -- read -------------------------------------------------------------
     def read(self, spark: SparkSession, snapshot_id: int | None = None) -> DataFrame:
@@ -138,37 +144,52 @@ class Table:
         return reduce(DataFrame.unionByName, (reader.parquet(d) for d in dirs))
 
     # -- write ------------------------------------------------------------
-    def _write_data(self, df: DataFrame, partition_by: list[str] | None) -> tuple[str, str]:
-        rel = f"data-{uuid.uuid4().hex[:12]}"
-        path = os.path.join(self.root, rel)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
-        return rel, path
-
     def _commit(
         self,
         op: str,
-        dirs: list[str],
-        new_dir_abs: str | None,
-        rows: int,
+        df: DataFrame | None,
+        schema_json: str,
+        partition_by: list[str] | None = None,
         meta: dict[str, Any] | None = None,
-        files: list[dict[str, Any]] | None = None,
     ) -> int:
+        """Write ``df`` (if any) as one new data dir, then publish snapshot
+        N+1: the new dir alone (overwrite) or after the current snapshot's
+        dirs (append). Row counts come from the new files' parquet
+        footers; an unreadable footer raises ``RowCountUnavailable``
+        BEFORE the manifest is published, so no snapshot with an unknown
+        row count ever becomes current."""
+        dirs: list[str] = []
+        files: list[dict[str, Any]] = []
+        if df is not None:
+            rel = f"data-{uuid.uuid4().hex[:12]}"
+            path = os.path.join(self.root, rel)
+            w = df.write.mode("overwrite")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(path)
+            files = _walk_row_counts(path)
+            unread = [f["file"] for f in files if f["rows"] is None]
+            if unread:
+                raise RowCountUnavailable(
+                    f"table {self.name} (stage {(meta or {}).get('stage')}): no row "
+                    f"count for {len(unread)} file(s) of the new {op} snapshot, "
+                    f"e.g. {rel}/{unread[0]}"
+                )
+            dirs = [rel]
         m = self._load()
+        if op == "append" and m["current"]:
+            prev = next(s for s in m["snapshots"] if s["id"] == m["current"])
+            dirs = prev["dirs"] + dirs
         sid = m["current"] + 1
-        if files is None:
-            files = _walk_row_counts(new_dir_abs) if new_dir_abs else []
         m["snapshots"].append(
             {
                 "id": sid,
                 "op": op,
                 "dirs": dirs,
                 "ts": time.time(),
-                "rows_written": rows,
+                "rows_written": sum(f["rows"] for f in files),
                 "files": files,
-                "meta": meta or {},
+                "meta": {**(meta or {}), "_schema": schema_json},
             }
         )
         m["current"] = sid
@@ -181,11 +202,7 @@ class Table:
         partition_by: list[str] | None = None,
         meta: dict[str, Any] | None = None,
     ) -> int:
-        rel, path = self._write_data(df, partition_by)
-        files = _walk_row_counts(path)
-        rows = sum(f["rows"] or 0 for f in files)
-        meta = {**(meta or {}), "_schema": df.schema.json()}
-        return self._commit("overwrite", [rel], path, rows, meta, files=files)
+        return self._commit("overwrite", df, df.schema.json(), partition_by, meta)
 
     def append(
         self,
@@ -193,15 +210,7 @@ class Table:
         partition_by: list[str] | None = None,
         meta: dict[str, Any] | None = None,
     ) -> int:
-        m = self._load()
-        prev_dirs: list[str] = []
-        if m["current"]:
-            prev_dirs = next(s["dirs"] for s in m["snapshots"] if s["id"] == m["current"])
-        rel, path = self._write_data(df, partition_by)
-        files = _walk_row_counts(path)
-        rows = sum(f["rows"] or 0 for f in files)
-        meta = {**(meta or {}), "_schema": df.schema.json()}
-        return self._commit("append", prev_dirs + [rel], path, rows, meta, files=files)
+        return self._commit("append", df, df.schema.json(), partition_by, meta)
 
     def append_empty(self, schema_json: str, meta: dict[str, Any] | None = None) -> int:
         """Commit a snapshot that appends ZERO rows without running a
@@ -210,12 +219,7 @@ class Table:
         For callers that have PROVEN emptiness driver-side (e.g. the
         zero-orphan shortcut) — writing an empty DataFrame through the
         executor path costs a full job submission + commit for nothing."""
-        m = self._load()
-        prev_dirs: list[str] = []
-        if m["current"]:
-            prev_dirs = next(s["dirs"] for s in m["snapshots"] if s["id"] == m["current"])
-        meta = {**(meta or {}), "_schema": schema_json}
-        return self._commit("append", prev_dirs, None, 0, meta, files=[])
+        return self._commit("append", None, schema_json, meta=meta)
 
     def merge_insert_absent(
         self,

@@ -104,8 +104,14 @@ def materialize_graph(
     edges: DataFrame,
     url_obj_preds: tuple[str, ...] = ("MENTIONED_IN_PUBLICATION",),
     total_edges: int | None = None,
+    fp: str | None = None,
 ) -> dict:
     """MERGE nodes + FK-validated edges; quarantine orphans; log metrics.
+
+    The quarantine commit comes last and is stamped
+    ``meta={"stage": "materialize", "fp": fp}``: a quarantine snapshot
+    carrying the caller's fingerprint proves all three merges committed
+    (the pipeline's materialize skip rule).
 
     FK validation strategy at corpus scale:
     - ``subj`` is always an entity id -> validated with a **broadcast**
@@ -195,10 +201,11 @@ def materialize_graph(
     )
     # MERGE (not append) so the quarantine honors the same 're-loads are
     # no-ops' contract as nodes/edges: a crash between the edges merge and
-    # the pipeline's checkpoint mark re-runs this function, and an append
-    # would duplicate the identical orphan set (inflating the lineage
-    # orphan counts). Orphans inherit the link stage's per-(subj,pred,obj)
+    # the quarantine commit re-runs this function, and an append would
+    # duplicate the identical orphan set (inflating the lineage orphan
+    # counts). Orphans inherit the link stage's per-(subj,pred,obj)
     # uniqueness, so the staging dedup shuffle is skipped.
+    commit_meta = {"stage": "materialize", "fp": fp}
     valid_written = edges_t.snapshots()[-1].rows_written
     if (
         total_edges is not None
@@ -208,10 +215,10 @@ def materialize_graph(
         # zero-orphan shortcut (docstring): provably-empty orphan set ->
         # commit the empty snapshot DRIVER-SIDE, skipping both the second
         # corpus-scale scan and the empty write's job submission
-        quarantine_t.append_empty(orphan.schema.json())
+        quarantine_t.append_empty(orphan.schema.json(), meta=commit_meta)
     else:
         quarantine_t.merge_insert_absent(
-            spark, orphan, ["subj", "pred", "obj"], assume_unique=True
+            spark, orphan, ["subj", "pred", "obj"], assume_unique=True, meta=commit_meta
         )
     n_orphan = quarantine_t.snapshots()[-1].rows_written
 

@@ -29,7 +29,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import DecimalType, IntegerType, IntegralType, StructField, StructType
 
 
 def _cosine_col(vec_col, query: list[float]):
@@ -114,18 +114,20 @@ def assign_cells(
     fraction = min(1.0, float(target) / max(total, 1))
     # pmod-first keeps the mixed operand < 2^32 so the *131 stays inside
     # signed-long range for ANY id magnitude (ANSI multiply throws).
-    # Non-numeric ids (string/UUID keys — the pre-r5 xxhash64 seeding
-    # accepted them) route through the portable MD5 hash instead of a
-    # cast('long') that would throw CAST_INVALID_INPUT under ANSI; the
-    # mixer stays cross-engine (portable_hash60 has a DuckDB twin), so
-    # a future string-keyed oracle remains constructible.
-    id_type = dict(embeddings.dtypes)[id_col]
-    numeric_id = id_type in ("tinyint", "smallint", "int", "bigint") or (
-        id_type.startswith("decimal")
+    # Only ids that cast to long exactly take the cast: integral types and
+    # decimal(p,0) with p <= 18. Every other id (strings/UUIDs, fractional
+    # decimals whose cast would truncate 1.2 and 1.4 to one seed, wide
+    # decimals that overflow a long under ANSI) routes through the
+    # portable MD5 hash of its string form; the mixer stays cross-engine
+    # (portable_hash60 has a DuckDB twin), so a future oracle for such
+    # keys remains constructible.
+    id_type = embeddings.schema[id_col].dataType
+    long_id = isinstance(id_type, IntegralType) or (
+        isinstance(id_type, DecimalType) and id_type.scale == 0 and id_type.precision <= 18
     )
     raw_id = (
         F.col(id_col).cast("long")
-        if numeric_id
+        if long_id
         else portable_hash60(F.col(id_col).cast("string"))
     )
     idm = F.pmod(raw_id, F.lit(4294967296))

@@ -68,11 +68,13 @@ def mean_word_len(text_col: Column) -> Column:
     return total / F.greatest(F.size(toks), F.lit(1))
 
 
-def quality_score(text_col: Column) -> Column:
+def quality_score(text_col: Column, lang: str | None = "en") -> Column:
     """Composite quality in [0,1]-ish: rewards stopword presence and sane
-    word lengths, penalizes punctuation soup. Deterministic column math."""
+    word lengths, penalizes punctuation soup. Deterministic column math.
+    The reference spelling: ``with_quality_stats`` and ``quality_keep``
+    are tested row for row against it."""
     return F.round(
-        F.lit(0.5) * stopword_ratio(text_col)
+        F.lit(0.5) * stopword_ratio(text_col, lang)
         + F.lit(0.5) * (F.lit(1.0) - punct_ratio(text_col))
         - F.when(mean_word_len(text_col) > 12, 0.25).otherwise(0.0),
         6,
@@ -90,7 +92,7 @@ def with_quality_stats(
     """Adds ``n_tokens`` + ``quality`` (and with ``extras`` also rounded
     ``punct_ratio``/``stopword_ratio``) in ONE tokenization pass.
 
-    The Column-expression spellings (`token_count(t)`, `quality_score(t)`)
+    The Column-expression spellings (`token_count(t)`, `quality_score(t, lang)`)
     re-evaluate the tokenizing regex split per use: higher-order functions
     are interpreted (no whole-stage-codegen subexpression elimination), so
     a projection combining them splits the text ~7x per row — measured at
@@ -134,7 +136,7 @@ def quality_keep(
     text_col: Column, min_tokens: int, min_quality: float, lang: str | None = "en"
 ) -> Column:
     """One-pass keep predicate, row-for-row equal to
-    ``(token_count(t) >= min_tokens) & (quality_score(t) >= min_quality)``.
+    ``(token_count(t) >= min_tokens) & (quality_score(t, lang) >= min_quality)``.
 
     A predicate spelled over projected stats columns gets alias-substituted
     and pushed below the projection by Catalyst (PushPredicateThroughNonJoin

@@ -7,8 +7,8 @@ src/graphdb_connector/mapping.py:29-40) plus idempotent Cypher MERGE so
 partial reloads don't duplicate (builder/cypher.yml:24). This module is
 the Spark-native generalization: new page files landing in the corpus
 directory are discovered by a file-source stream, pushed through the SAME
-narrow extract->tag transformations as the batch pipeline (one code path,
-two drivers), and appended to the warehouse mentions table exactly once
+fused extract->tag map as the batch pipeline (``tag_pages_fused``: one code
+path, two drivers), and appended to the warehouse mentions table exactly once
 per micro-batch.
 
 Exactly-once: Structured Streaming's checkpoint guarantees each file is
@@ -33,9 +33,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus.pages import PAGES_SCHEMA
-from ..extract import with_extracted_text
 from ..lakehouse import Table
-from ..tag import tag_mentions
+from ..tag import tag_pages_fused
 
 
 def stream_pages(
@@ -121,12 +120,7 @@ def incremental_mentions(
       already-ingested documents are dropped, genuinely new ones append.
     """
     pages = stream_pages(spark, pages_dir, max_files_per_trigger)
-    mentions = tag_mentions(
-        with_extracted_text(pages).select("url", "text", "lang"),
-        automaton_bc,
-        blocklist=blocklist,
-        lang=lang,
-    )
+    mentions = tag_pages_fused(pages, automaton_bc, blocklist=blocklist, lang=lang)
     seen = _committed_epochs(mentions_table)
     stream_id = _checkpoint_identity(checkpoint_dir)
     # The anti-join decision must survive crash/restart MID-drain: deriving

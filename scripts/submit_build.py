@@ -17,6 +17,7 @@ import tempfile
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+DEFAULT_MASTER = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
 
 
 def build_zip(dest_dir: str) -> str:
@@ -34,34 +35,42 @@ def build_zip(dest_dir: str) -> str:
     return zip_path
 
 
+def submit(job_script: str, job_args: list[str], master: str) -> int:
+    """Zip the package into a temp dir and run ``scripts/<job_script>``
+    through ``spark-submit --py-files``; returns the exit code."""
+    spark_submit = shutil.which("spark-submit") or os.path.join(
+        os.path.dirname(sys.executable), "spark-submit"
+    )
+    zip_path = build_zip(tempfile.mkdtemp(prefix="ckg_submit_"))
+    cmd = [
+        spark_submit,
+        "--master", master,
+        "--conf", "spark.sql.adaptive.enabled=true",
+        "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
+        "--py-files", zip_path,
+        os.path.join(REPO, "scripts", job_script),
+        *job_args,
+    ]
+    return subprocess.run(cmd).returncode
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pages", required=True)
     ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--master", default=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+    ap.add_argument("--master", default=DEFAULT_MASTER)
     ap.add_argument("--terms-per-type", type=int, default=60)
     ap.add_argument("--export-dir", default=None)
     args = ap.parse_args()
 
-    spark_submit = shutil.which("spark-submit") or os.path.join(
-        os.path.dirname(sys.executable), "spark-submit"
-    )
-    workdir = tempfile.mkdtemp(prefix="ckg_submit_")
-    zip_path = build_zip(workdir)
-    cmd = [
-        spark_submit,
-        "--master", args.master,
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
-        "--py-files", zip_path,
-        os.path.join(REPO, "scripts", "build_job.py"),
+    job_args = [
         "--pages", args.pages,
         "--warehouse", args.warehouse,
         "--terms-per-type", str(args.terms_per_type),
     ]
     if args.export_dir:
-        cmd += ["--export-dir", args.export_dir]
-    raise SystemExit(subprocess.run(cmd).returncode)
+        job_args += ["--export-dir", args.export_dir]
+    raise SystemExit(submit("build_job.py", job_args, args.master))
 
 
 if __name__ == "__main__":

@@ -9,44 +9,25 @@ from __future__ import annotations
 
 import argparse
 import os
-import shutil
-import subprocess
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from submit_build import build_zip  # noqa: E402  (same packaging rules)
+from submit_build import DEFAULT_MASTER, submit  # noqa: E402  (same launcher)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--docs", required=True)
     ap.add_argument("--warehouse", required=True)
-    ap.add_argument("--master", default=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+    ap.add_argument("--master", default=DEFAULT_MASTER)
     ap.add_argument("--no-lm-filter", action="store_true")
     args = ap.parse_args()
 
-    import tempfile
-
-    spark_submit = shutil.which("spark-submit") or os.path.join(
-        os.path.dirname(sys.executable), "spark-submit"
-    )
-    workdir = tempfile.mkdtemp(prefix="ckg_submit_")
-    zip_path = build_zip(workdir)
-    cmd = [
-        spark_submit,
-        "--master", args.master,
-        "--conf", "spark.sql.adaptive.enabled=true",
-        "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
-        "--py-files", zip_path,
-        os.path.join(REPO, "scripts", "curate_job.py"),
-        "--docs", args.docs,
-        "--warehouse", args.warehouse,
-    ]
+    job_args = ["--docs", args.docs, "--warehouse", args.warehouse]
     if args.no_lm_filter:
-        cmd.append("--no-lm-filter")
-    raise SystemExit(subprocess.run(cmd).returncode)
+        job_args.append("--no-lm-filter")
+    raise SystemExit(submit("curate_job.py", job_args, args.master))
 
 
 if __name__ == "__main__":

@@ -149,6 +149,40 @@ def test_assign_cells_accepts_string_ids(spark, emb):
     assert centroids.shape[0] == 4
 
 
+def test_assign_cells_decimal_ids(spark):
+    """Only ids that cast to long exactly take the cast('long') seed:
+    fractional decimals must not truncate onto one seed, wide decimals must
+    not overflow under ANSI, and decimal(p<=18,0) seeds like bigint."""
+    from ckg_spark.ops import simsearch
+
+    def cells(ids, id_type, n_cells):
+        vecs = [[1.0, 0.0], [0.0, 1.0], [0.6, 0.8]][: len(ids)]
+        df = spark.createDataFrame(
+            list(zip(ids, vecs)), f"vid {id_type}, embedding array<double>"
+        )
+        with_cells, centroids = simsearch.assign_cells(
+            df, n_cells=n_cells, id_col="vid", vec_col="embedding"
+        )
+        return sorted(r["cell"] for r in with_cells.collect()), centroids
+
+    from decimal import Decimal
+
+    # 1.2 and 1.4 would both cast to 1: one seed cell, one averaged centroid
+    _, centroids = cells([Decimal("1.2"), Decimal("1.4")], "decimal(38,2)", 64)
+    seeded = {tuple(c) for c in centroids if c.any()}
+    assert seeded == {(1.0, 0.0), (0.0, 1.0)}, seeded
+
+    big = [Decimal(2**63 + 5), Decimal(2**64 + 7)]
+    got, _ = cells(big, "decimal(38,0)", 4)
+    assert len(got) == 2
+
+    ids = [3, 17, 2**40]
+    dec_cells, dec_centroids = cells([Decimal(i) for i in ids], "decimal(18,0)", 4)
+    long_cells, long_centroids = cells(ids, "bigint", 4)
+    assert dec_cells == long_cells
+    assert np.array_equal(dec_centroids, long_centroids)
+
+
 def test_portable_hash_parity_with_duckdb(spark):
     """The portable MD5/lowbias mixers (canon/lsh.py) exist so the LSH
     dedup family can carry full DuckDB value-hash oracles — assert the
@@ -327,6 +361,51 @@ def test_quality_and_langid(spark, docs):
     en = spark.createDataFrame([(1, "the cat is in the hat and it was good")], ["doc_id", "text"])
     r = textstats.langid_scores(en).collect()[0]
     assert r["pred_lang"] == "en"
+
+
+@pytest.mark.parametrize("lang", ["en", None])
+def test_quality_stats_and_keep_match_quality_score(spark, lang):
+    """quality_score is the reference spelling: the one-pass
+    with_quality_stats columns equal token_count/quality_score, and
+    quality_keep keeps exactly the rows the reference predicate keeps."""
+    texts = [
+        "",
+        "   \t  ",
+        "the cat is in the hat and it was good to see",
+        "!!! ??? ... ,,, ;;",
+        "supercalifragilistic antidisestablishmentarianism pneumonoultramicroscopic",
+        "Hello, world! It's the best... isn't it? (Maybe.)",
+        "der Hund ist mit dem Ball und das Kind spielt nicht",
+        "le chat est dans la maison pour une nuit",
+        "one two three four five six seven eight nine ten eleven",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    t = F.col("text")
+    got = textstats.with_quality_stats(docs, "text", lang=lang).select(
+        "doc_id", "n_tokens", "quality"
+    )
+    ref = docs.select(
+        "doc_id",
+        textstats.token_count(t).alias("n_tokens"),
+        textstats.quality_score(t, lang).alias("quality"),
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+
+    kept_any = set()
+    for min_tokens, min_quality in [(0, 0.0), (1, 0.2), (3, 0.45), (8, 0.3), (2, 0.9)]:
+        keep = textstats.quality_keep(t, min_tokens, min_quality, lang=lang)
+        ref_keep = (textstats.token_count(t) >= min_tokens) & (
+            textstats.quality_score(t, lang) >= min_quality
+        )
+        ids = lambda pred: {r["doc_id"] for r in docs.filter(pred).collect()}
+        assert ids(keep) == ids(ref_keep), (min_tokens, min_quality)
+        kept_any.add(len(ids(keep)))
+    assert len(kept_any) > 2  # the grid separates the rows
+
+    # lang=None scores against the multilingual profile, not English only
+    de = docs.filter("doc_id = 6")
+    q = lambda lg: de.select(textstats.quality_score(t, lg)).first()[0]
+    assert q(None) > q("en")
 
 
 # -- multimodal -----------------------------------------------------------
@@ -1618,7 +1697,7 @@ def test_closeness_sampled_dispatch(spark):
     assert via_dispatch == direct
 
 
-def test_closeness_sampled_releases_superseded_checkpoints(spark):
+def test_closeness_sampled_releases_superseded_bfs_blocks(spark):
     """ADVICE r3: the per-round BFS checkpoints must be unpersisted once
     superseded — a diameter-D run must NOT retain ~D copies of the dist
     frame (localCheckpoint blocks are never auto-unpersisted). A path

@@ -65,7 +65,7 @@ def test_rerun_is_idempotent_and_resumes(spark, built):
     n_before = pipe.wh.table("edges").read(spark).count()
     snap_before = pipe.wh.table("edges").current_snapshot()
     stats2 = pipe.run()
-    # all stages skipped via checkpoint fingerprints
+    # all stages skipped via the fingerprints on their committed snapshots
     assert set(stats2["skipped"]) >= {"pages", "tag", "canon", "link"}
     assert pipe.wh.table("edges").read(spark).count() == n_before
     assert pipe.wh.table("edges").current_snapshot() == snap_before
@@ -98,32 +98,6 @@ def test_time_travel(spark, built):
     df_then = t.read(spark, first)
     df_now = t.read(spark)
     assert df_then.count() <= df_now.count()
-
-
-def test_materialized_text_path_identical(spark, built, tmp_path):
-    """materialize_text=True (staged extract) emits exactly the same edges
-    as the fused default, plus a pages_text snapshot and extract lineage."""
-    pipe, _, _ = built
-    wh2 = str(tmp_path / "wh_mat")
-    pipe2 = KGPipeline(
-        spark,
-        wh2,
-        vocab_cfg=VocabConfig(seed=7, terms_per_type=30),
-        pages_cfg=pipe.pages_cfg,
-        materialize_text=True,
-    )
-    pipe2.run()
-    fused = {
-        tuple(r) for r in pipe.wh.table("edges").read(spark)
-        .select("subj", "pred", "obj").collect()
-    }
-    staged = {
-        tuple(r) for r in pipe2.wh.table("edges").read(spark)
-        .select("subj", "pred", "obj").collect()
-    }
-    assert fused == staged
-    assert pipe2.wh.table("pages_text").exists()
-    assert "extract" in {m["stage"] for m in pipe2.wh.metrics()}
 
 
 def test_crash_mid_pipeline_resumes_from_last_snapshot(spark, tmp_path, monkeypatch):
@@ -271,7 +245,7 @@ def test_zero_orphan_shortcut_proof_and_fallback(spark, tmp_path):
 
 
 def test_quarantine_merge_is_idempotent(spark, tmp_path):
-    """Re-running materialize after a crash-before-checkpoint must not
+    """Re-running materialize after a crash before its quarantine commit must not
     duplicate quarantine rows (same MERGE contract as nodes/edges)."""
     from ckg_spark.lakehouse import Warehouse
     from ckg_spark.materialize.graph import materialize_graph

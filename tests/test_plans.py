@@ -309,7 +309,7 @@ def test_lm_scoring_broadcasts_model_and_stays_jvm(spark):
     token stream never shuffles; the tokenizer/ln math is JVM-side."""
     from ckg_spark.ops import lm
 
-    # the catalog query localCheckpoints the scored frame before
+    # the catalog query pins the scored frame (localCheckpoint) before
     # bucketing (the production persist-then-bucket shape), which
     # truncates its visible plan — assert the join strategy on the
     # scoring frame itself

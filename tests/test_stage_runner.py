@@ -1,5 +1,6 @@
 """pipeline.run_stage, the one stage runner of both DAGs: job tags under a
-caller's job group, manifest row counts, and the unreadable-count guard."""
+caller's job group, manifest row counts, the unreadable-count guard, and
+the manifest as the only commit record."""
 
 from __future__ import annotations
 
@@ -73,11 +74,11 @@ def test_stage_jobs_carry_stage_tag_and_caller_group(spark, tmp_path):
 
 
 def test_run_stage_raises_when_a_row_count_is_unreadable(spark, tmp_path, monkeypatch):
-    """A data file whose footer could not be read has rows=None in the
-    manifest; run_stage must not count it as 0 rows, and must neither log
-    the stage nor mark it done."""
+    """A data file whose footer could not be read has no row count; the
+    commit must not count it as 0 rows, and must neither publish the
+    snapshot (a rerun would skip the stage as complete) nor log the stage."""
     import ckg_spark.lakehouse as lh
-    from ckg_spark.pipeline import Checkpoints, RowCountUnavailable, run_stage
+    from ckg_spark.pipeline import run_stage
 
     real = lh._walk_row_counts
 
@@ -86,20 +87,62 @@ def test_run_stage_raises_when_a_row_count_is_unreadable(spark, tmp_path, monkey
         return [{**f, "rows": None} if i == 0 else f for i, f in enumerate(files)]
 
     wh = lh.Warehouse(str(tmp_path / "wh"))
-    ckpt = Checkpoints(wh)
 
     def compute():
         return spark.range(10).repartition(2), None
 
     monkeypatch.setattr(lh, "_walk_row_counts", one_unreadable)
-    with pytest.raises(RowCountUnavailable, match="stage s"):
-        run_stage(spark, wh, ckpt, "s", "fp", "t", compute)
-    assert ckpt.done("s", "fp") is None
+    with pytest.raises(lh.RowCountUnavailable, match="stage s"):
+        run_stage(spark, wh, "t", "s", "fp", compute)
+    assert not wh.table("t").exists() and wh.table("t").snapshots() == []
     assert not any(m["stage"] == "s" for m in wh.metrics())
 
     monkeypatch.undo()
-    _, skipped, rows = run_stage(spark, wh, ckpt, "s", "fp", "t", compute)
+    _, skipped, rows = run_stage(spark, wh, "t", "s", "fp", compute)
     assert (skipped, rows) == (False, 10)
     # the skip path reads the count from the manifest too
-    _, skipped, rows = run_stage(spark, wh, ckpt, "s", "fp", "t", compute)
+    _, skipped, rows = run_stage(spark, wh, "t", "s", "fp", compute)
     assert (skipped, rows) == (True, 10)
+
+
+@pytest.mark.parametrize(
+    "dag,stage", [("kg", "tag"), ("kg", "materialize"), ("curate", "curate_pii")]
+)
+def test_stage_committed_before_a_crash_is_skipped_on_rerun(
+    spark, tmp_path, monkeypatch, dag, stage
+):
+    """A crash after a stage's snapshot commits but before its metrics
+    record is written must not rerun the stage: the table manifest is the
+    commit record, so the rerun skips it."""
+    import ckg_spark.lakehouse as lh
+
+    real = lh.Warehouse.log_metric
+
+    def crash_after_commit(self, name, **kv):
+        if name == stage:
+            raise RuntimeError("simulated crash after commit")
+        return real(self, name, **kv)
+
+    if dag == "kg":
+        vocab_cfg = VocabConfig(seed=7, terms_per_type=5)
+        pages_cfg = config_from_vocab(
+            generate_vocab(vocab_cfg), n_docs=20, seed=42, partitions=2
+        )
+        run = lambda: KGPipeline(
+            spark, str(tmp_path / "wh"), vocab_cfg=vocab_cfg, pages_cfg=pages_cfg
+        ).run()
+        skipped_name = stage
+    else:
+        docs = _docs(spark)  # one frame: its plan hash is the input identity
+        run = lambda: CurationPipeline(
+            spark, str(tmp_path / "wh"),
+            CurationConfig(min_quality=0.0, span_window=4, span_min_repeats=3,
+                           drop_ppl_bucket=None, pack_budget=64),
+        ).run(docs)
+        skipped_name = "pii_scrub"
+
+    monkeypatch.setattr(lh.Warehouse, "log_metric", crash_after_commit)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run()
+    monkeypatch.undo()
+    assert skipped_name in run()["skipped"]

@@ -397,19 +397,21 @@ def test_antijoin_flag_invariant_for_batch_populated_table(tmp_path):
     table = wh.table("m")
     assert _needs_url_antijoin(table, "me") is False  # empty table: no-op
 
-    # simulate manifest states without Spark: batch append (no epoch meta)
-    table._commit("append", ["d0"], None, 5, meta={"source": "batch"})
+    # simulate manifest states without Spark (zero-row appends carrying each
+    # snapshot's meta): batch append (no epoch meta)
+    NO_COLS = '{"type": "struct", "fields": []}'
+    table.append_empty(NO_COLS, meta={"source": "batch"})
     assert _needs_url_antijoin(table, "me") is True
     # this stream's first epoch committed: guard must STAY on
-    table._commit("append", ["d1"], None, 0, meta={"epoch": 0, "stream_id": "me"})
+    table.append_empty(NO_COLS, meta={"epoch": 0, "stream_id": "me"})
     assert _needs_url_antijoin(table, "me") is True
     # a legacy epoch snapshot (no stream_id) also forces it
     table2 = wh.table("m2")
-    table2._commit("append", ["d0"], None, 3, meta={"epoch": 0})
+    table2.append_empty(NO_COLS, meta={"epoch": 0})
     assert _needs_url_antijoin(table2, "me") is True
     # a table written ONLY by this stream needs no anti-join
     table3 = wh.table("m3")
-    table3._commit("append", ["d0"], None, 3, meta={"epoch": 0, "stream_id": "me"})
+    table3.append_empty(NO_COLS, meta={"epoch": 0, "stream_id": "me"})
     assert _needs_url_antijoin(table3, "me") is False
 
 

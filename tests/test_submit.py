@@ -11,6 +11,18 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _committed_stages(wh: str) -> set[str]:
+    """Stages with a record in the warehouse's metrics journal. A stage
+    logs its record right after its snapshot commits, so each of these is
+    committed. A partly written last line is ignored."""
+    path = os.path.join(wh, "_metrics.jsonl")
+    if not os.path.exists(path):
+        return set()
+    with open(path) as f:
+        complete = f.read().split("\n")[:-1]
+    return {json.loads(line)["stage"] for line in complete if line.strip()}
+
+
 def test_submit_build_end_to_end(spark, vocab, tmp_path):
     from ckg_spark.corpus.pages import config_from_vocab, generate_pages_df
 
@@ -110,7 +122,7 @@ def test_submit_kill_resume_identical_triples(spark, vocab, tmp_path):
     out = subprocess.run(submit(wh_clean), capture_output=True, text=True, timeout=420)
     assert out.returncode == 0, out.stderr[-2000:]
 
-    # killed build: wait for the tag stage's checkpoint mark, then
+    # killed build: wait for the tag stage's metrics record, then
     # SIGKILL the whole process group mid-pipeline
     wh_kill = str(tmp_path / "wh_kill")
     proc = subprocess.Popen(
@@ -118,21 +130,15 @@ def test_submit_kill_resume_identical_triples(spark, vocab, tmp_path):
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         start_new_session=True,
     )
-    ckpt_path = os.path.join(wh_kill, "_checkpoints.json")
-    committed: dict = {}
+    committed: set[str] = set()
     deadline = time.time() + 300
     try:
         while time.time() < deadline:
             if proc.poll() is not None:
                 break
-            if os.path.exists(ckpt_path):
-                with open(ckpt_path) as f:
-                    try:
-                        committed = json.load(f)
-                    except json.JSONDecodeError:
-                        committed = {}  # mid-write
-                if "tag" in committed:
-                    break
+            committed = _committed_stages(wh_kill)
+            if "tag" in committed:
+                break
             time.sleep(0.05)
         assert "tag" in committed, "tag stage never committed before timeout"
         os.killpg(proc.pid, signal.SIGKILL)
@@ -166,7 +172,7 @@ def test_submit_kill_resume_identical_triples(spark, vocab, tmp_path):
 
 def test_submit_curate_kill_resume_identical_output(spark, tmp_path):
     """Process-level kill/resume for the CURATION pipeline (the same
-    checkpoint contract the KG build test covers): SIGKILL the
+    resume contract the KG build test covers): SIGKILL the
     spark-submit process group after the first stage commits; the rerun
     must skip every stage committed before the kill and curate the
     IDENTICAL document set an uninterrupted run produces."""
@@ -205,21 +211,15 @@ def test_submit_curate_kill_resume_identical_output(spark, tmp_path):
         stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
         start_new_session=True,
     )
-    ckpt_path = os.path.join(wh_kill, "_checkpoints.json")
-    committed: dict = {}
+    committed: set[str] = set()
     deadline = time.time() + 300
     try:
         while time.time() < deadline:
             if proc.poll() is not None:
                 break
-            if os.path.exists(ckpt_path):
-                try:
-                    with open(ckpt_path) as f:
-                        committed = json.load(f)
-                except json.JSONDecodeError:
-                    committed = {}
-                if committed:
-                    break
+            committed = _committed_stages(wh_kill)
+            if committed:
+                break
             time.sleep(0.02)
         assert committed, "no curation stage committed before timeout"
         os.killpg(proc.pid, signal.SIGKILL)
@@ -233,7 +233,7 @@ def test_submit_curate_kill_resume_identical_output(spark, tmp_path):
         [ln for ln in out2.stdout.strip().splitlines() if ln.startswith("{")][-1]
     )
     for stage in committed:
-        # checkpoint records carry the table-namespace prefix; the
+        # metrics records carry the table-namespace prefix; the
         # stats report the bare stage names
         assert stage.removeprefix("curate_") in stats2["skipped"], (
             stage, stats2["skipped"],
