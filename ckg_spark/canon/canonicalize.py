@@ -1,4 +1,4 @@
-"""Aliased-entity canonicalization: LSH blocking -> exact verify -> CC.
+"""Aliased-entity canonicalization: exact alias-join pairs -> connected components.
 
 Semantics (shared with the single-process oracle, ckg_spark/oracle.py):
 two terms A, B merge iff
@@ -15,14 +15,11 @@ merged into one canonical node; a *synonym* shared by two otherwise
 unrelated terms (multi-mapping, mapping.py:115-142) stays a fan-out, NOT a
 merge — which is why the predicate is anchored on the preferred name.
 
-Two candidate-generation paths, identical final output:
-- ``mode='exact'``: equi-join on the normalized surface (one shuffle of the
-  dimension-sized alias set) — the fast path when the verify predicate is
-  exact match;
-- ``mode='lsh'``: MinHash-LSH banding (ckg_spark/canon/lsh.py) produces
-  candidate pairs, then the exact predicate filters them. Recall is 1.0
-  because identical normalized token sets hash to identical signatures.
-  This is the path that generalizes to fuzzy thresholds (Jaccard < 1).
+One candidate generator: an equi-join of every term's normalized name
+against the normalized alias set (``merge_pairs``) — exactly the predicate
+above, so no candidate is ever filtered afterwards. Components come from
+one union-find (``cc.union_find``) on the driver, or from the iterative
+DataFrame CC when the pair list is too large to collect.
 
 Cluster representative = min(term id): deterministic canonical node ids.
 """
@@ -32,11 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .cc import connected_components
-from .lsh import lsh_candidate_pairs, minhash_signatures
+from .cc import connected_components, union_find
 from .normalize import with_normalized
-
-_SEP = "\x00"
 
 
 def _alias_norms(terms: DataFrame) -> DataFrame:
@@ -68,11 +62,11 @@ def _name_norms(terms: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def _verify(names: DataFrame, aliases: DataFrame) -> DataFrame:
-    """Exact predicate: a term's name-norm appears among another term's
-    alias-norms (same entity_type). Returns (id_a < id_b) pairs."""
-    n = F.broadcast(names).alias("n")  # dimension-sized: never shuffle
-    a = aliases.alias("a")
+def merge_pairs(terms: DataFrame) -> DataFrame:
+    """(src, dst) merge edges between term ids, src < dst: a term's
+    name-norm appears among another same-type term's alias-norms."""
+    n = F.broadcast(_name_norms(terms)).alias("n")  # dimension-sized: never shuffle
+    a = _alias_norms(terms).alias("a")
     hits = n.join(
         a,
         (F.col("n.norm") == F.col("a.norm"))
@@ -83,67 +77,6 @@ def _verify(names: DataFrame, aliases: DataFrame) -> DataFrame:
         F.greatest(F.col("n.id"), F.col("a.id")).alias("dst"),
     )
     return hits.distinct()
-
-
-def merge_pairs(terms: DataFrame, mode: str = "lsh") -> DataFrame:
-    """(src, dst) merge edges between term ids."""
-    aliases = _alias_norms(terms)
-    names = _name_norms(terms)
-    if mode == "exact":
-        return _verify(names, aliases)
-    # LSH blocking: items are (term, normalized surface); token set = norm tokens
-    items = (
-        aliases.select(
-            F.concat_ws(_SEP, "id", "entity_type", "norm").alias("item_key"),
-            F.split("norm", " ").alias("tokens"),
-        )
-        .distinct()
-        .coalesce(1)  # vocab is dimension-sized; avoid 1-row tasks
-    )
-    # materialize signatures before the banding self-join: both join sides
-    # (and the later verify join) would otherwise re-run the Python UDF
-    # stage once per branch — measured 5x recompute on this plan
-    sigs = minhash_signatures(items, "item_key", "tokens").localCheckpoint()
-    cand_items = lsh_candidate_pairs(sigs, broadcast_build_side=True)
-    # item pairs -> term pairs (drop same-term, cross-type)
-    parts_a = F.split(F.col("key_a"), _SEP)
-    parts_b = F.split(F.col("key_b"), _SEP)
-    cand_terms = (
-        cand_items.select(
-            parts_a.getItem(0).alias("id_a"),
-            parts_a.getItem(1).alias("ta"),
-            parts_b.getItem(0).alias("id_b"),
-            parts_b.getItem(1).alias("tb"),
-        )
-        .filter((F.col("id_a") != F.col("id_b")) & (F.col("ta") == F.col("tb")))
-        .select(
-            F.least("id_a", "id_b").alias("src"),
-            F.greatest("id_a", "id_b").alias("dst"),
-        )
-        .distinct()
-    )
-    # verify candidates with the exact predicate (inner join restricts to candidates)
-    verified = _verify(names, aliases)
-    return cand_terms.join(F.broadcast(verified), on=["src", "dst"], how="inner")
-
-
-def _driver_components(pairs: list[tuple[str, str]]) -> dict[str, str]:
-    """Union-find with path compression; representative = min id."""
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in pairs:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
-    return {x: find(x) for x in parent}
 
 
 def _driver_merge_pairs(
@@ -174,7 +107,6 @@ def _driver_merge_pairs(
 
 def build_canonical_map(
     terms: DataFrame,
-    mode: str = "lsh",
     driver_cc_threshold: int = 1_000_000,
     driver_vocab_threshold: int = 200_000,
 ) -> DataFrame:
@@ -190,57 +122,40 @@ def build_canonical_map(
       reference holds in per-process dicts (mapping.py:85-142); burning
       ~40 Spark stages of fixed scheduling overhead on it would dominate
       the whole build at any corpus size.
-    - larger: MinHash-LSH blocking + exact verify (``merge_pairs``), then
-      union-find on the driver while the pair list stays under
-      ``driver_cc_threshold``, else the iterative pointer-jumping
-      DataFrame CC. Tests assert all paths agree.
+    - larger: the distributed alias join (``merge_pairs``), then
+      ``connected_components``, which collects and union-finds up to
+      ``driver_cc_threshold`` pairs and runs the iterative pointer-jumping
+      DataFrame CC above that. Tests assert all paths agree.
 
     The resulting map is dimension-sized — downstream rewrites broadcast
     it, so the hub-entity skew of the mention table never shuffles
     (broadcast joins are skew-immune on the probe side).
     """
-    spark = terms.sparkSession
-    import pandas as pd
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    map_schema = StructType(
-        [
-            StructField("term_id", StringType(), False),
-            StructField("node_id", StringType(), False),
-        ]
-    )
     n_terms = terms.count()
     if n_terms <= driver_vocab_threshold:
+        import pandas as pd
+        from pyspark.sql.types import StringType, StructField, StructType
+
         rows = terms.select("id", "entity_type", "name", "synonyms").collect()
-        mapping = _driver_components(_driver_merge_pairs(rows))
+        mapping = union_find(_driver_merge_pairs(rows))
         data = sorted((r["id"], mapping.get(r["id"], r["id"])) for r in rows)
-        return spark.createDataFrame(
+        return terms.sparkSession.createDataFrame(
             pd.DataFrame({"term_id": [a for a, _ in data], "node_id": [b for _, b in data]}),
-            map_schema,
-        )
-    pairs = merge_pairs(terms, mode=mode).coalesce(1).localCheckpoint()
-    n_pairs = pairs.count()
-    comp_schema = StructType(
-        [
-            StructField("node", StringType(), False),
-            StructField("component", StringType(), False),
-        ]
-    )
-    if n_pairs <= driver_cc_threshold:
-        mapping = _driver_components(
-            [(r["src"], r["dst"]) for r in pairs.collect()]
-        )
-        items = sorted(mapping.items())
-        comp = spark.createDataFrame(
-            pd.DataFrame(
-                {"node": [k for k, _ in items], "component": [c for _, c in items]}
+            StructType(
+                [
+                    StructField("term_id", StringType(), False),
+                    StructField("node_id", StringType(), False),
+                ]
             ),
-            comp_schema,
         )
-    else:
-        # this branch already decided the pairs are too big for the driver —
-        # disable cc's own limit-probe gate (it would be a wasted job here)
-        comp = connected_components(pairs, "src", "dst", driver_max_edges=0)
+    # vocab pairs are dimension-sized: one partition keeps cc's size
+    # probe a single task
+    comp = connected_components(
+        merge_pairs(terms).coalesce(1),
+        "src",
+        "dst",
+        driver_max_edges=driver_cc_threshold,
+    )
     return (
         terms.select(F.col("id").alias("term_id"))
         .join(F.broadcast(comp), F.col("term_id") == F.col("node"), "left")

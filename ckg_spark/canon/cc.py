@@ -37,36 +37,28 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 
-def _driver_union_find(edges: DataFrame, rows, src: str) -> DataFrame:
-    """Exact same output contract as the iterative loop: (node, component)
-    with component = min member id, node/component typed like the input."""
+def union_find(pairs) -> dict:
+    """(a, b) pairs -> {node: min member of its component}, on the driver.
+
+    Union by min root: every root is the smallest id of its set, so the
+    representative needs no second pass. Path halving keeps ``find``
+    near-constant. Shared by the vocabulary canonicalizer and the
+    short-circuit below."""
     parent: dict = {}
 
     def find(x):
-        r = x
-        while parent[r] != r:
-            r = parent[r]
-        while parent[x] != r:  # path compression
-            parent[x], x = r, parent[x]
-        return r
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-    for a, b in rows:
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
+    for a, b in pairs:
         ra, rb = find(a), find(b)
         if ra != rb:
-            parent[ra] = rb
-    comp_min: dict = {}
-    for n in parent:
-        r = find(n)
-        m = comp_min.get(r)
-        comp_min[r] = n if m is None or n < m else m
-    t = edges.schema[src].dataType
-    schema = StructType(
-        [StructField("node", t, True), StructField("component", t, True)]
-    )
-    data = [(n, comp_min[find(n)]) for n in parent]
-    return edges.sparkSession.createDataFrame(data, schema)
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {x: find(x) for x in parent}
 
 
 def connected_components(
@@ -95,7 +87,13 @@ def connected_components(
     if driver_max_edges:
         probe = edges.limit(driver_max_edges + 1).collect()
         if len(probe) <= driver_max_edges:
-            return _driver_union_find(edges, probe, src)
+            t = edges.schema[src].dataType
+            schema = StructType(
+                [StructField("node", t, True), StructField("component", t, True)]
+            )
+            return edges.sparkSession.createDataFrame(
+                list(union_find(probe).items()), schema
+            )
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))

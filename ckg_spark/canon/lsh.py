@@ -1,23 +1,21 @@
-"""MinHash signatures + LSH banding for candidate-pair blocking.
+"""MinHash family + LSH banding for near-duplicate candidate blocking.
 
-Scale rationale: the naive way to find similar alias strings is an all-pairs
-comparison — O(n^2) and impossible at a UMLS-sized vocabulary or a
-10^12-document corpus. MinHash-LSH turns it into:
+Scale rationale: the naive way to find near-duplicate documents is an
+all-pairs comparison — O(n^2) and impossible at a 10^12-document corpus.
+MinHash-LSH turns it into:
 
-1. signature: k min-hashes over the token set — fully JVM-side
-   (``xxhash64(seed_i, token)`` inside ``transform``/``array_min``, i.e.
-   whole-stage codegen; no Python workers, no shuffle);
+1. signature: k min-hashes over the shingle set, one affine permutation
+   per hash over a single base hash (``minhash_coeffs``; the corpus
+   signature pass is ``ops/dedup.minhash_signatures_corpus``);
 2. banding: explode k hashes into b bands of r rows; equal band-hash =>
    same bucket (one shuffle, on the band key);
 3. candidate pairs: self-join within buckets (bounded by bucket size);
-   downstream verifies with the exact predicate.
+   downstream verifies with exact shingle Jaccard.
 
-Identical token sets produce identical signatures, so recall is exactly 1.0
-for the exact-normalized-match predicate the KG canonicalizer verifies with;
-for fuzzy thresholds the usual (1/b)^(1/r) s-curve applies.
+Candidate recall follows the usual 1-(1-s^r)^b s-curve in the Jaccard s.
 
-All hashing is deterministic (xxhash64 with literal per-index seeds) —
-no ``Math.random``/wall-clock anywhere.
+All hashing is deterministic (fixed-seed coefficients, literal per-band
+seeds) — no ``Math.random``/wall-clock anywhere.
 """
 
 from __future__ import annotations
@@ -107,8 +105,14 @@ def portable_band_hash_sql(band_idx: int, elem_exprs: list[str]) -> str:
 
 def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """The affine-permutation family's (a_i, c_i), fixed-seed — shared by
-    the JVM signature path below and the numpy corpus path in ops/dedup
-    so both produce bit-identical signatures over the same bases."""
+    the numpy corpus path in ops/dedup and the catalog's DuckDB MinHash
+    twin so both compute bit-identical signatures over the same bases.
+
+    ``h_i(x) = (a_i*x + c_i) mod p`` over one base hash per shingle:
+    multiplication mod p reorders the shingles independently per family,
+    and products stay < 2^62. A Kirsch-Mitzenmacher ``b1 + i*b2`` family
+    would not do: it is linear in i, so consecutive families share their
+    argmin almost always and the LSH s-curve collapses to a step."""
     import random
 
     rng = random.Random(0x5EED)
@@ -118,85 +122,10 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    items: DataFrame,
-    key_col: str,
-    tokens_col: str,
-    num_hashes: int = 32,
-    hash_basis: str = "xxhash64",
-) -> DataFrame:
-    """items(key, tokens: array<string>) -> (key, signature: array<long>).
-
-    Fully JVM-side: one ``xxhash64`` base per token, then hash family i is
-    the affine permutation ``h_i(x) = (a_i*x + c_i) mod p`` over the base
-    (details below); sig[i] = min over the tokens. A narrow map with zero
-    shuffles and zero Python — the previous pandas-UDF version spent the
-    whole stage in per-byte FNV hashing in Python (the classic
-    UDF-in-the-hot-path trap; SURVEY.md §4).
-
-    The family MUST actually reorder tokens independently per i. Two
-    traps, both caught by the planted-near-dup recall gate in
-    tests/test_ops.py (a degenerate family matches all bands or none, so
-    the LSH s-curve collapses to a step):
-
-    - **the lambda-arity trap**: ``F.transform(toks, lambda t, i=i: ...)``
-      looks like a closure over the loop variable, but pyspark inspects
-      the lambda's SIGNATURE — two parameters means it is called as
-      (element, index), so ``i`` silently becomes the element's ARRAY
-      INDEX column and every "family" is the identical function. Bind
-      per-family constants through a factory function returning a
-      one-parameter lambda, never through default arguments.
-    - Kirsch-Mitzenmacher ``b1 + i*b2`` is linear in i with a shared
-      coefficient per token, so the argmin over tokens is the lower
-      envelope of n lines — it changes only at envelope vertices, and
-      consecutive families share argmins almost always. Fine for Bloom
-      filters, degenerate for min-wise hashing.
-
-    The family here is the classical affine permutation over Z_p:
-    ``h_i(x) = (a_i*x + c_i) mod p`` with p = 2^31 - 1 and per-family
-    constants a_i, c_i drawn from a fixed-seed PRNG at plan-build time —
-    multiplication mod p genuinely reorders per family. One xxhash64 per
-    token total, then a multiply-add-mod per family (cheaper than k
-    per-family string rehashes on the corpus-scale dedup path). Products
-    stay < 2^62, so ANSI long arithmetic cannot overflow. The base-hash
-    array is PROJECTED into a column before the per-family lambdas
-    reference it (a computed expression inside a higher-order-function
-    lambda re-evaluates per element — the HOF-CSE trap, BENCH.md).
-
-    Identical token *sets* give identical signatures (min is duplicate- and
-    order-insensitive) — the recall-1.0 property downstream exact verifiers
-    rely on. Empty/null token arrays sign as all-zeros.
-    """
-    p = MINHASH_P
-    coeffs = minhash_coeffs(num_hashes)
-    toks = F.coalesce(F.col(tokens_col), F.array().cast("array<string>"))
-    # base-hash basis: xxhash64 (fast JVM intrinsic, default) or the
-    # portable MD5 mixer (cross-engine identical — the basis the
-    # DuckDB-twinned catalog queries run; see the portable section above)
-    if hash_basis == "portable":
-        bases = F.transform(toks, lambda t: F.pmod(portable_hash60(t), F.lit(p)))
-    elif hash_basis == "xxhash64":
-        bases = F.transform(toks, lambda t: F.pmod(F.xxhash64(t), F.lit(p)))
-    else:
-        raise ValueError(f"unknown hash_basis {hash_basis!r}")
-    with_bases = items.select(F.col(key_col).alias("key"), bases.alias("__bases__"))
-
-    def affine(a: int, c: int):
-        # one-parameter lambda via factory: see the lambda-arity trap above
-        return lambda x: F.pmod(F.lit(a) * x + F.lit(c), F.lit(p))
-
-    sig_cols = [
-        F.array_min(F.transform(F.col("__bases__"), affine(a, c))) for a, c in coeffs
-    ]
-    signature = F.transform(F.array(*sig_cols), lambda s: F.coalesce(s, F.lit(0)))
-    return with_bases.select("key", signature.alias("signature"))
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 8,
     rows_per_band: int = 4,
-    broadcast_build_side: bool = False,
     band_hash: str = "xxhash64",
 ) -> DataFrame:
     """(key, signature) -> distinct candidate pairs (key_a < key_b).
@@ -204,10 +133,6 @@ def lsh_candidate_pairs(
     One shuffle on (band, band_hash); the within-bucket self-join is bounded
     by bucket size, and the distinct() collapses pairs found in multiple
     bands before any expensive verification runs.
-
-    ``broadcast_build_side=True`` skips the shuffle entirely by broadcasting
-    one side of the self-join — correct ONLY for dimension-sized inputs
-    (vocab canonicalization); corpus-scale dedup must leave it False.
     """
     n = bands * rows_per_band
     # eager bounds probe (one narrow limit-1 job): a banding config that
@@ -246,7 +171,7 @@ def lsh_candidate_pairs(
         "key",
         F.posexplode(F.array(*band_cols)).alias("band", "band_hash"),
     )
-    a = (F.broadcast(buckets) if broadcast_build_side else buckets).alias("a")
+    a = buckets.alias("a")
     b = buckets.alias("b")
     pairs = (
         a.join(

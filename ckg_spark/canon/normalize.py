@@ -5,7 +5,7 @@ tokens sorted and re-joined with single spaces. Two aliases that differ only
 by casing / punctuation / token order normalize identically — the
 equivalence the reference approximates with hand-curated alias dictionaries
 (/root/reference src/graphdb_connector/mapping.py:85-142) and we generalize
-with MinHash-LSH + connected components.
+with an exact join on normalized aliases + connected components.
 
 Implemented twice on purpose: once as a pure-Python function (oracle,
 driver-side vocab prep) and once as JVM-side Column expressions so the

@@ -69,7 +69,7 @@ class VocabConfig:
     seed: int = 7
     terms_per_type: int = 60
     shared_alias_pairs: int = 6      # aliases mapped to 2 canonical ids (fan-out)
-    near_dup_pairs_per_type: int = 4  # LSH/CC merge targets
+    near_dup_pairs_per_type: int = 4  # planted name-variant twins canon must merge
     hub_terms: int = 3               # planted high-frequency entities
 
 

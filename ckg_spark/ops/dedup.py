@@ -136,13 +136,11 @@ def minhash_signatures_corpus(
     there, separate worker PROCESSES also sidestep the shared-JVM-heap
     allocation contention that caps all-HOF stages on 4 local cores.
 
-    Same affine family/coefficients as canon.lsh.minhash_signatures
-    (minhash_coeffs); the hash BASIS differs (token-window xxhash64 vs
-    shingle-string xxhash64), so signatures are not comparable across
-    the two functions — candidates from either feed the same exact-
-    Jaccard verifier, which is what fixes the emitted pairs. Recall is
-    gated by the planted-near-dup tests either way. Identical text =>
-    identical signature; empty/null texts sign as all-zeros.
+    The affine family is canon.lsh.minhash_coeffs; candidates feed the
+    exact-Jaccard verifier, which is what fixes the emitted pairs. Recall
+    and the per-pair signature/Jaccard agreement are gated by the
+    planted-near-dup tests. Identical text => identical signature;
+    empty/null texts sign as all-zeros.
 
     ``hash_basis='portable'`` swaps the window hash for the cross-engine
     MD5 mixer (canon.lsh.portable_hash60) over the joined shingle STRING

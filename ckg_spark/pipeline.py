@@ -159,7 +159,6 @@ class KGPipeline:
         warehouse_root: str,
         vocab_cfg: VocabConfig | None = None,
         pages_cfg: PagesConfig | None = None,
-        canon_mode: str = "lsh",
         comention_min_score: float | None = None,
     ):
         self.spark = spark
@@ -169,7 +168,6 @@ class KGPipeline:
         if pages_cfg is None:
             pages_cfg = config_from_vocab(self.vocab)
         self.pages_cfg = pages_cfg
-        self.canon_mode = canon_mode
         # ≙ the reference's association score cutoffs (stringParser.py:51);
         # None keeps every pair (the P/R-gated default)
         self.comention_min_score = comention_min_score
@@ -221,11 +219,13 @@ class KGPipeline:
         if skipped:
             stats["skipped"].append("tag")
 
-        # stage 3: canonicalization (LSH blocking + CC)
-        fp_canon = _fingerprint("canon", {"mode": self.canon_mode, "vocab": asdict(self.vocab_cfg)})
+        # stage 3: canonicalization (exact alias join + union-find). The
+        # retired "lsh" candidate mode stays in the payload so existing
+        # warehouses keep their canon/link/materialize fingerprints.
+        fp_canon = _fingerprint("canon", {"mode": "lsh", "vocab": asdict(self.vocab_cfg)})
         cmap, skipped, _ = run_stage(
             spark, self.wh, "canonical_map", "canon", fp_canon,
-            lambda: (build_canonical_map(terms, mode=self.canon_mode), None),
+            lambda: (build_canonical_map(terms), None),
         )
         if skipped:
             stats["skipped"].append("canon")

@@ -1103,7 +1103,14 @@ def _ivf_oracle_sql() -> str:
     before use, and both discontinuous selectors (cell argmax, probe
     top-nprobe) rank on ROUND(sim, 9) with lowest-cell tie-break, so
     BLAS-vs-SQL float noise (~1e-16) cannot flip them. n_cells=8,
-    sample target 256, seed 13, nprobe=4, k=10 mirror the Spark call."""
+    sample target 256, seed 13, nprobe=4, k=10 mirror the Spark call.
+
+    Accepted residual risk: the centroid coordinate is DuckDB's sequential
+    AVG here and numpy's pairwise mean on the Spark side, so a mean landing
+    within ~1e-13 of a 5e-7 boundary would round to different 6-dp values
+    and could move a cell assignment. The window is ~1e-13 wide and only
+    8x64 coordinates are rounded, so the chance is negligible and the SQL
+    stays as it is (changing it would move the oracle's value hash)."""
     from ..ops.curation import split_u_sql
 
     idm = "(((vec_id % 4294967296) + 4294967296) % 4294967296)"

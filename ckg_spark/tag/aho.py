@@ -136,12 +136,14 @@ def build_automaton(alias_rows, engine: str = "hash"):
     dropped (noise guard, ≙ the reference's curated dictionaries).
 
     Engines (identical matches, property-tested equivalent):
-    - ``'hash'`` (default): first-word-indexed hash tagger
-      (ckg_spark.tag.rx.HashTagger) — C-speed tokenization + dict lookups,
-      the fastest;
-    - ``'regex'``: trie-regex (slower than AC in CPython: the engine probes
-      the alternation at every position — kept as a second reference);
-    - ``'aho'``: pure-Python Aho-Corasick, the semantics reference."""
+    - ``'hash'`` (default, production): first-word-indexed hash tagger
+      (ckg_spark.tag.rx.HashTagger) — C-speed tokenization + dict lookups;
+    - ``'aho'``: pure-Python Aho-Corasick, the semantics reference.
+
+    Any other ``engine`` raises ``ValueError`` (a typo must not silently
+    swap in the slow reference)."""
+    if engine not in ("hash", "aho"):
+        raise ValueError(f"unknown tagger engine {engine!r}; expected 'hash' or 'aho'")
     surface_payloads: dict[str, list[tuple]] = {}
     for row in alias_rows:
         surface = row["alias"].lower().strip()
@@ -155,10 +157,6 @@ def build_automaton(alias_rows, engine: str = "hash"):
         from .rx import HashTagger
 
         return HashTagger(surface_payloads)
-    if engine == "regex":
-        from .rx import RegexTagger
-
-        return RegexTagger(surface_payloads)
     ac = AhoCorasick()
     for surface, payloads in surface_payloads.items():
         for payload in payloads:

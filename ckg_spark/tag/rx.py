@@ -1,116 +1,32 @@
-"""Regex-trie dictionary tagger — the C-speed engine behind tagging.
+"""Hash dictionary tagger — the production engine behind tagging.
 
-Same matching contract as :class:`ckg_spark.tag.aho.AhoCorasick` (lowercase,
-word boundaries, leftmost-longest non-overlapping, multi-payload fan-out —
-see that module's docstring for the reference citations), but executed by
-CPython's ``re`` engine instead of a per-character Python loop.
-
-Why it is exact:
-
-- the alternation is a **trie** (shared prefixes), with the end-of-pattern
-  branch emitted LAST at every node — the regex engine greedily follows
-  longer continuations and only falls back to the shorter accept on
-  backtrack, which is precisely longest-match-at-this-start;
-- ``finditer`` scans left-to-right and resumes after each match — precisely
-  the leftmost + non-overlapping greedy pick of the AC path;
-- word boundaries are per-branch lookarounds ``(?<![^\\W_])`` /
-  ``(?![^\\W_])`` emitted only when the pattern's first/last character is
-  alphanumeric — ``[^\\W_]`` is Unicode word-chars minus underscore, i.e.
-  ``str.isalnum`` for all practical text (property-tested against the AC on
-  adversarial inputs);
-- an invalid-boundary long candidate backtracks into the shorter accept
-  ("gastric cancerous" fires "gastric", not "gastric cancer"), matching
-  the AC's candidate filtering.
-
-The object pickles as (pattern string + payload dict) — smaller than the
-AC's node lists — and compiles lazily once per executor process.
+Same matching contract as :class:`ckg_spark.tag.aho.AhoCorasick`, the
+semantics reference (lowercase, word boundaries, leftmost-longest
+non-overlapping, multi-payload fan-out — see that module's docstring for
+the reference citations), but driven by CPython's C-speed ``re``
+tokenizer and dict lookups instead of a per-character Python loop.
+Equivalence with the Aho-Corasick reference is property-tested
+(tests/test_tagging.py).
 """
 
 from __future__ import annotations
 
 import re
 
-_WORD = r"[^\W_]"  # unicode word chars minus '_' == isalnum for practical text
-_END = "\x00end"
-
-
-def _trie_of(surfaces) -> dict:
-    trie: dict = {}
-    for s in surfaces:
-        node = trie
-        for ch in s:
-            node = node.setdefault(ch, {})
-        node[_END] = True
-    return trie
-
-
-def _emit(node: dict, prev_char: str | None) -> str:
-    branches = []
-    for ch in sorted(k for k in node if k != _END):
-        branches.append(re.escape(ch) + _emit(node[ch], ch))
-    end_branch: str | None = None
-    if _END in node:
-        end_branch = f"(?!{_WORD})" if (prev_char and prev_char.isalnum()) else ""
-    if end_branch is None:
-        return branches[0] if len(branches) == 1 else "(?:" + "|".join(branches) + ")"
-    if not branches:
-        return end_branch
-    return "(?:" + "|".join(branches + [end_branch]) + ")"
-
-
-def build_trie_pattern(surfaces) -> str:
-    """One regex matching any surface, longest-first, boundary-guarded."""
-    trie = _trie_of(surfaces)
-    root_branches = []
-    for ch in sorted(k for k in trie if k != _END):
-        guard = f"(?<!{_WORD})" if ch.isalnum() else ""
-        root_branches.append(guard + re.escape(ch) + _emit(trie[ch], ch))
-    return "(?:" + "|".join(root_branches) + ")"
-
-
-class RegexTagger:
-    """Drop-in for AhoCorasick.find(): [(start, end, surface_lc, payload)]."""
-
-    def __init__(self, surface_payloads: dict[str, list[tuple]]):
-        self.surface_payloads = surface_payloads
-        self.pattern = build_trie_pattern(surface_payloads) if surface_payloads else None
-        self._rx = None
-
-    def __getstate__(self):
-        d = self.__dict__.copy()
-        d["_rx"] = None  # compile once per executor process, not per pickle
-        return d
-
-    def find(self, text: str) -> list[tuple[int, int, str, tuple]]:
-        if self.pattern is None:
-            return []
-        if self._rx is None:
-            self._rx = re.compile(self.pattern)
-        text_lc = text.lower()
-        out = []
-        for m in self._rx.finditer(text_lc):
-            s, e = m.span()
-            surface = text_lc[s:e]
-            for payload in self.surface_payloads[surface]:
-                out.append((s, e, surface, payload))
-        return out
-
-
 _RUN_RX = re.compile(r"[^\W_]+|_")  # alnum runs; '_' is its own (non-word) run
 
 
 class HashTagger:
-    """First-word-indexed hash tagger — the fast default engine.
+    """First-word-indexed hash tagger — the production engine.
 
     Key observation: a valid match whose surface starts with an
     alphanumeric character must begin exactly at the start of an
     alphanumeric run (the word-boundary rule guarantees it). So instead of
-    walking every character (Aho-Corasick) or probing every position
-    (regex), tokenize the text into alnum runs with one C-speed
-    ``finditer`` and, at each run, look up the run's text in a dict of
-    candidate surfaces keyed by their first word — a couple of C dict/slice
-    operations per word of text. Candidates are tried longest-first; the
-    end boundary re-checks exactly like the AC.
+    walking every character (Aho-Corasick), tokenize the text into alnum
+    runs with one C-speed ``finditer`` and, at each run, look up the run's
+    text in a dict of candidate surfaces keyed by their first word — a
+    couple of C dict/slice operations per word of text. Candidates are
+    tried longest-first; the end boundary re-checks exactly like the AC.
 
     Surfaces that start with a non-alphanumeric character (cannot align to
     a run start) go through a ``str.find`` fallback scan — rare in any real

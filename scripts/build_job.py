@@ -22,7 +22,6 @@ def main() -> None:
     ap.add_argument("--warehouse", required=True, help="output warehouse root")
     ap.add_argument("--terms-per-type", type=int, default=60)
     ap.add_argument("--vocab-seed", type=int, default=7)
-    ap.add_argument("--canon-mode", default="lsh")
     ap.add_argument(
         "--export-dir",
         default=None,
@@ -44,7 +43,6 @@ def main() -> None:
         spark,
         args.warehouse,
         vocab_cfg=VocabConfig(seed=args.vocab_seed, terms_per_type=args.terms_per_type),
-        canon_mode=args.canon_mode,
     )
     stats = pipe.run(pages=pages)
     if args.export_dir:

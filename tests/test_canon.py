@@ -1,4 +1,4 @@
-"""Canonicalization: LSH blocking == exact join; clusters match the oracle."""
+"""Canonicalization: exact alias-join pairs + union-find; clusters match the oracle."""
 
 from __future__ import annotations
 
@@ -23,14 +23,6 @@ def test_normalize_python_equals_spark(spark):
     assert got == [normalize_surface(s) for s in samples]
 
 
-def test_merge_pairs_lsh_equals_exact(spark, vocab):
-    terms, _, _ = vocab_dataframes(spark, vocab)
-    exact = {(r["src"], r["dst"]) for r in merge_pairs(terms, mode="exact").collect()}
-    lsh = {(r["src"], r["dst"]) for r in merge_pairs(terms, mode="lsh").collect()}
-    assert lsh == exact
-    assert len(exact) >= len(vocab.expected_merges)
-
-
 def test_null_synonyms_terms_still_merge(spark):
     """Two same-named terms whose synonyms arrays are NULL must merge in
     the DISTRIBUTED path: concat(array(name), synonyms) is null-intolerant,
@@ -45,10 +37,9 @@ def test_null_synonyms_terms_still_merge(spark):
         ],
         "id string, entity_type string, name string, description string, synonyms array<string>",
     )
-    for mode in ("exact", "lsh"):
-        pairs = {(r["src"], r["dst"]) for r in merge_pairs(terms, mode=mode).collect()}
-        assert ("T1", "T2") in pairs, mode
-        assert not any("T3" in p for p in pairs), mode
+    pairs = {(r["src"], r["dst"]) for r in merge_pairs(terms).collect()}
+    assert ("T1", "T2") in pairs
+    assert not any("T3" in p for p in pairs)
 
 
 def test_lsh_banding_mismatch_raises(spark):
@@ -107,15 +98,15 @@ def test_connected_components_raises_on_nonconvergence(spark):
 
 
 def test_distributed_cc_equals_driver_union_find(spark, vocab):
-    """Three-way agreement: the distributed pointer-jumping loop, cc's own
-    union-find short-circuit (default gate), and canonicalize's independent
-    _driver_components implementation all produce the same labeling."""
-    from ckg_spark.canon.canonicalize import _driver_components
-
+    """Three-way agreement: the distributed pointer-jumping loop, cc's
+    union-find short-circuit (default gate), and the independent oracle
+    clustering (restricted to the paired nodes) produce the same labeling."""
     terms, _, _ = vocab_dataframes(spark, vocab)
-    pairs = merge_pairs(terms, mode="exact")
+    pairs = merge_pairs(terms)
     pair_list = [(r["src"], r["dst"]) for r in pairs.collect()]
-    exp = _driver_components(pair_list)
+    assert len(pair_list) >= len(vocab.expected_merges)
+    oracle = _merge_clusters(vocab)
+    exp = {n: oracle[n] for pair in pair_list for n in pair}
     dist = {
         r["node"]: r["component"]
         for r in connected_components(pairs, driver_max_edges=0).collect()
@@ -129,13 +120,11 @@ def test_distributed_cc_equals_driver_union_find(spark, vocab):
 
 def test_canonical_map_all_paths_agree(spark, vocab):
     """driver-vocab fast path == distributed pairs + driver CC == fully
-    distributed (LSH pairs + iterative DataFrame CC)."""
+    distributed (alias-join pairs + iterative DataFrame CC)."""
     terms, _, _ = vocab_dataframes(spark, vocab)
-    fast = build_canonical_map(terms, mode="exact")  # driver fast path (default)
-    mid = build_canonical_map(terms, mode="exact", driver_vocab_threshold=0)
-    full = build_canonical_map(
-        terms, mode="exact", driver_vocab_threshold=0, driver_cc_threshold=0
-    )
+    fast = build_canonical_map(terms)  # driver fast path (default)
+    mid = build_canonical_map(terms, driver_vocab_threshold=0)
+    full = build_canonical_map(terms, driver_vocab_threshold=0, driver_cc_threshold=0)
     exp = sorted(map(tuple, fast.collect()))
     assert sorted(map(tuple, mid.collect())) == exp
     assert sorted(map(tuple, full.collect())) == exp
@@ -145,7 +134,7 @@ def test_canonical_map_matches_oracle(spark, vocab):
     terms, _, _ = vocab_dataframes(spark, vocab)
     got = {
         r["term_id"]: r["node_id"]
-        for r in build_canonical_map(terms, mode="lsh").collect()
+        for r in build_canonical_map(terms).collect()
     }
     exp = _merge_clusters(vocab)
     assert got == exp

@@ -682,15 +682,15 @@ def test_minhash_recall_follows_s_curve(spark, planted_neardups):
     """Measured recall vs the exact-Jaccard predicate at three operating
     points; the floors sit under the theoretical 1-(1-s^r)^b with margin.
     Also guards the hash FAMILY itself: per-pair matching-minhash fraction
-    must track the true Jaccard (a degenerate family matches all-or-none)."""
+    must track the true Jaccard (a degenerate family matches all-or-none),
+    checked on the corpus signature pass the curation near-dup stage runs."""
     df, planted, truth = planted_neardups
 
-    from ckg_spark.canon.lsh import minhash_signatures
-
-    sh = dedup.word_shingles(df, "doc_id", "text", 3)
     sigs = {
         r.key: r.signature
-        for r in minhash_signatures(sh, "key", "shingles", num_hashes=128).collect()
+        for r in dedup.minhash_signatures_corpus(
+            df, "doc_id", "text", shingle_n=3, num_hashes=128
+        ).collect()
     }
     for a, b, rate in planted[:10]:
         frac = sum(1 for x, y in zip(sigs[a], sigs[b]) if x == y) / 128

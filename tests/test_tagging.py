@@ -136,25 +136,24 @@ def _engines(vocab):
 
     etype = {t["id"]: t["entity_type"] for t in vocab.terms}
     rows = [{**a, "entity_type": etype[a["canonical_id"]]} for a in vocab.aliases]
-    return [build_automaton(rows, engine=e) for e in ("aho", "regex", "hash")]
+    return [build_automaton(rows, engine=e) for e in ("aho", "hash")]
 
 
 def test_all_engines_equal_on_corpus(vocab, pages_cfg):
-    """Trie-regex and hash taggers produce identical matches to the
-    Aho-Corasick reference over the full synthetic corpus."""
+    """The hash tagger produces identical matches to the Aho-Corasick
+    reference over the full synthetic corpus."""
     from ckg_spark.corpus.pages import _gen_one
     from ckg_spark.extract.html_text import extract_text
 
-    aho, rx, hsh = _engines(vocab)
+    aho, hsh = _engines(vocab)
     for i in range(150):
         _url, _ts, html, _lang = _gen_one(pages_cfg.seed, i, pages_cfg)
         text = extract_text(html)
         exp = sorted(aho.find(text))
-        assert sorted(rx.find(text)) == exp, text[:200]
         assert sorted(hsh.find(text)) == exp, text[:200]
 
 
-def test_regex_engine_equals_aho_adversarial():
+def test_hash_engine_equals_aho_adversarial():
     from ckg_spark.tag import build_automaton
 
     rows = [
@@ -168,7 +167,6 @@ def test_regex_engine_equals_aho_adversarial():
         {"canonical_id": "H", "alias": "shared syn"},  # multi-mapping fan-out
     ]
     aho = build_automaton(rows, engine="aho")
-    rx = build_automaton(rows, engine="regex")
     hsh = build_automaton(rows, engine="hash")
     cases = [
         "gastric cancer clinic",          # longest wins
@@ -184,11 +182,10 @@ def test_regex_engine_equals_aho_adversarial():
     ]
     for text in cases:
         exp = sorted(aho.find(text))
-        assert sorted(rx.find(text)) == exp, text
         assert sorted(hsh.find(text)) == exp, text
 
 
-def test_regex_engine_equals_aho_hypothesis():
+def test_hash_engine_equals_aho_hypothesis():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -202,7 +199,6 @@ def test_regex_engine_equals_aho_hypothesis():
         {"canonical_id": "E", "alias": "xy1"},
     ]
     aho = build_automaton(rows, engine="aho")
-    rx = build_automaton(rows, engine="regex")
     hsh = build_automaton(rows, engine="hash")
     alphabet = st.sampled_from(list("abcdef xy1-._,!é5"))
 
@@ -210,7 +206,6 @@ def test_regex_engine_equals_aho_hypothesis():
     @settings(max_examples=500, deadline=None)
     def check(text):
         exp = sorted(aho.find(text))
-        assert sorted(rx.find(text)) == exp, repr(text)
         assert sorted(hsh.find(text)) == exp, repr(text)
 
     check()
@@ -218,9 +213,9 @@ def test_regex_engine_equals_aho_hypothesis():
 
 def test_engines_equal_on_metacharacter_aliases():
     """Aliases containing regex metacharacters and non-ASCII ('c++',
-    'il-6(v2)', 'p.v600e', 'tnf-α', 'a+b'): the regex engine must
-    escape every literal, and the boundary guards must agree with the
-    trie engines when a surface starts/ends in punctuation."""
+    'il-6(v2)', 'p.v600e', 'tnf-α', 'a+b'): the hash engine's boundary
+    guards must agree with the Aho-Corasick reference when a surface
+    starts/ends in punctuation."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -235,7 +230,6 @@ def test_engines_equal_on_metacharacter_aliases():
         {"canonical_id": "F", "alias": "il-6"},
     ]
     aho = build_automaton(rows, engine="aho")
-    rx = build_automaton(rows, engine="regex")
     hsh = build_automaton(rows, engine="hash")
 
     cases = [
@@ -247,7 +241,6 @@ def test_engines_equal_on_metacharacter_aliases():
     ]
     for text in cases:
         exp = sorted(aho.find(text))
-        assert sorted(rx.find(text)) == exp, text
         assert sorted(hsh.find(text)) == exp, text
 
     alphabet = st.sampled_from(list("abcilv+-().α62 pe"))
@@ -256,7 +249,17 @@ def test_engines_equal_on_metacharacter_aliases():
     @settings(max_examples=300, deadline=None)
     def check(text):
         exp = sorted(aho.find(text))
-        assert sorted(rx.find(text)) == exp, repr(text)
         assert sorted(hsh.find(text)) == exp, repr(text)
 
     check()
+
+
+def test_build_automaton_rejects_unknown_engine():
+    """Only 'hash' and 'aho' exist: a typo or a retired engine name must
+    raise instead of silently building the slow pure-Python reference."""
+    import pytest
+
+    rows = [{"canonical_id": "A", "alias": "gastric"}]
+    for engine in ("regex", "Hash", "ahocorasick", ""):
+        with pytest.raises(ValueError, match="engine"):
+            build_automaton(rows, engine=engine)
