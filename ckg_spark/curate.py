@@ -305,9 +305,9 @@ class CurationPipeline:
         fp_prev2 = fp_nd
 
         # 7b. decontamination screen (optional): drop documents leaking
-        # holdout/benchmark content. The eval side broadcasts (it is
-        # dimension-sized vs the corpus), so the train shingles never
-        # shuffle (ops/curation.ngram_overlap_split, broadcast_eval).
+        # holdout/benchmark content. ops/curation.ngram_overlap_split
+        # broadcasts the eval side (it is dimension-sized vs the corpus),
+        # so the train shingles never shuffle.
         if eval_docs is not None:
             def _contam():
                 pairs = ngram_overlap_pairs(

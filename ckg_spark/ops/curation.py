@@ -103,34 +103,26 @@ def ngram_overlap_split(
     text_col: str,
     is_eval: Column,
     n: int = 8,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """(left_id, right_id, n_shared) — (train, eval) doc pairs sharing at
     least one FULL word n-gram, with the distinct shared-ngram count.
-    ONE scan of the corpus: tokenize+shingle once, group by shingle, and
-    expand (train x eval) pairs IN-ARRAY per shingle (the co-mention
-    trick — no shingle self-join, no second scan). Shuffles: one on the
-    shingle (high-cardinality, well-distributed), one on the pair.
+    Tokenize+shingle once, then a broadcast hash join on the shingle:
+    decontamination is ASYMMETRIC — the eval/holdout side is a fixed
+    benchmark suite, dimension-sized relative to a 100 TB training
+    corpus — so the eval (shingle, doc) pairs broadcast and the train
+    side never shuffles its shingles at all: one map-side hash join,
+    then one pair-sized aggregation. The corpus scans twice (cheap,
+    columnar) instead of shuffling once (expensive).
 
-    The shingle shuffle key is ``xxhash64`` of the TOKEN SLICE, not the
-    joined n-gram string: the ~50-byte-per-shingle text never exists at
-    all (no concat, no string distinct) and the exchange carries 8-byte
-    longs — measured 24s -> single digits at sf0.1, where this shuffle
-    dominated the whole bench suite. Equality on the hash equals equality
-    on the n-gram modulo 64-bit collisions (~1e-6 at 10^8 distinct
-    shingles — far below the screen's own n-gram-coincidence noise; the
-    DuckDB oracle joins the exact strings, so the hash gate would flag a
-    collision if one ever mattered).
-
-    ``broadcast_eval`` (default): decontamination is ASYMMETRIC — the
-    eval/holdout side is a fixed benchmark suite, dimension-sized
-    relative to a 100 TB training corpus — so the eval (shingle, doc)
-    pairs broadcast and the train side never shuffles its shingles at
-    all: one map-side hash join, then one pair-sized aggregation. The
-    corpus scans twice (cheap, columnar) instead of shuffling once
-    (expensive). Pass False when both sides are corpus-scale: that path
-    keeps the symmetric shingle-grouped shuffle with in-array pair
-    expansion."""
+    The shingle key is ``xxhash64`` of the TOKEN SLICE, not the joined
+    n-gram string: the ~50-byte-per-shingle text never exists at all (no
+    concat, no string distinct) and the eval distinct, the broadcast and
+    the join carry 8-byte longs (when shingles were still shuffled, this
+    key took the screen from 24 s to single digits at sf0.1). Equality on
+    the hash equals equality on the n-gram modulo 64-bit collisions
+    (~1e-6 at 10^8 distinct shingles — far below the screen's own
+    n-gram-coincidence noise; the DuckDB oracle joins the exact strings,
+    so the hash gate would flag a collision if one ever mattered)."""
     from .textstats import tokens_col
 
     # tokens projected into a real column FIRST: the transform lambda
@@ -148,31 +140,16 @@ def ngram_overlap_split(
         F.array_distinct(F.transform(idx, lambda i: F.xxhash64(F.slice(toks, i, n)))),
     ).otherwise(F.array().cast("array<long>"))
     ex = tk.select("id", "ev", F.explode(hashed).alias("s"))
-    if broadcast_eval:
-        ev_sh = (
-            ex.filter(F.col("ev"))
-            .select("s", F.col("id").alias("right_id"))
-            .distinct()
-        )
-        pairs = (
-            ex.filter(~F.col("ev"))
-            .join(F.broadcast(ev_sh), "s")
-            .select(F.col("id").alias("left_id"), "right_id")
-        )
-        return pairs.groupBy("left_id", "right_id").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_shared")
-        )
-    per_s = (
-        ex.groupBy("s")
-        .agg(
-            F.collect_set(F.when(~F.col("ev"), F.col("id"))).alias("tr"),
-            F.collect_set(F.when(F.col("ev"), F.col("id"))).alias("ev_ids"),
-        )
-        .filter((F.size("tr") > 0) & (F.size("ev_ids") > 0))
+    ev_sh = (
+        ex.filter(F.col("ev"))
+        .select("s", F.col("id").alias("right_id"))
+        .distinct()
     )
-    pairs = per_s.select(
-        F.explode("tr").alias("left_id"), F.col("ev_ids")
-    ).select("left_id", F.explode("ev_ids").alias("right_id"))
+    pairs = (
+        ex.filter(~F.col("ev"))
+        .join(F.broadcast(ev_sh), "s")
+        .select(F.col("id").alias("left_id"), "right_id")
+    )
     return pairs.groupBy("left_id", "right_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_shared")
     )
@@ -187,7 +164,7 @@ def ngram_overlap_pairs(
 ) -> DataFrame:
     """Two-frame wrapper over :func:`ngram_overlap_split` (tags each side
     and unions — prefer the split variant when both sides filter one
-    base table, which scans it once)."""
+    base table)."""
     tagged = left.select(
         F.col(id_col), F.col(text_col), F.lit(False).alias("__ev__")
     ).unionByName(

@@ -1,13 +1,12 @@
-"""Column-parameterized statistical operators (the generic spellings of
-the catalog's oracle-verified stats queries).
+"""Column-parameterized statistical operators — the one implementation
+of each stats method.
 
-The catalog entries in queries/catalog.py inline each formula against a
-fixed test table so every constant of the arithmetic graph is mirrored
-in a DuckDB oracle; THESE functions are the reusable API the analysis
-dispatcher (ckg_spark/analysis.py ≙ the reference's
-analytics_core/analytics_factory.py) hands user frames to. The
-arithmetic is identical — tests assert the generic spelling reproduces
-the catalog queries' hash-verified outputs on the same framing.
+The analysis dispatcher (ckg_spark/analysis.py ≙ the reference's
+analytics_core/analytics_factory.py) hands user frames to these
+functions, and the stats queries in queries/catalog.py call the same
+functions on a fixed test table, where a DuckDB SQL twin mirrors every
+constant of the arithmetic graph. The oracle gate therefore certifies
+the code users run; tests/test_analysis.py pins the delegation.
 
 All inputs are LONG format: one row per observation, with caller-named
 feature / group / value columns. Everything stays JVM column math;
@@ -27,7 +26,7 @@ def _nz(c) -> F.Column:
     """NULL instead of an ANSI DIVIDE_BY_ZERO for denominators that are
     legitimately zero on degenerate inputs (zero-variance features,
     singleton groups). The NULL statistic/p-value then flows the
-    documented 'untestable feature' path (:func:`_split_valid_p` —
+    documented 'untestable feature' path (:func:`_ranked` —
     p_adj NULL, rejected 0) instead of aborting the whole job; this
     matches pingouin/pandas, where these cases come back NaN and are
     dropped, not raised. Non-degenerate rows are bitwise unchanged."""
@@ -59,9 +58,9 @@ def welch_ttest(
     group_b: str,
 ) -> DataFrame:
     """Per-feature Welch two-sample t-test: (feature, n1, n2, t_stat,
-    dof, p_value) — the generic spelling of q_welch_ttest
-    (calculate_ttest, analytics.py:859-989). One conditional
-    aggregation; the t tail is the dual-backend incomplete beta."""
+    dof, p_value) — calculate_ttest (analytics.py:859-989), run by
+    q_welch_ttest. One conditional aggregation; the t tail is the
+    dual-backend incomplete beta."""
     v = F.col(value_col).cast("double")
     av = F.when(F.col(group_col) == group_a, v)
     bv = F.when(F.col(group_col) == group_b, v)
@@ -83,7 +82,8 @@ def welch_ttest(
         "m2",
     )
     # zero variance in BOTH groups: t and the Welch-Satterthwaite dof are
-    # 0/0 (pingouin returns NaN) — NULL here, absorbed by _split_valid_p.
+    # 0/0 (pingouin returns NaN) — NULL here; the corrections (_ranked)
+    # leave such rows unranked.
     t_raw = (F.col("m1") - F.col("m2")) / _nz(F.sqrt(F.col("se1") + F.col("se2")))
     dof_raw = ((F.col("se1") + F.col("se2")) * (F.col("se1") + F.col("se2"))) / _nz(
         (F.col("se1") * F.col("se1")) / (F.col("n1") - 1)
@@ -108,16 +108,45 @@ def welch_ttest(
     )
 
 
-def _split_valid_p(df: DataFrame, p_col: str) -> tuple[DataFrame, DataFrame]:
-    """(valid, invalid) rows by p-value: NULL/NaN p must not enter a
-    correction's ranking — ascending Spark sort puts NULL FIRST, so one
-    untestable feature (e.g. zero variance in both groups) would seed the
-    reverse running-min and reject everything below it. The reference's
-    statsmodels path never sees them (scipy returns nan, pandas drops);
-    here they come back with p_adj NULL / rejected 0."""
+def _ranked(df: DataFrame, p_col: str, key_cols: list[str]) -> DataFrame:
+    """The corrections' shared framing: adds ``__ok__`` (p is non-NULL
+    and not NaN), ``__rn__`` (rank ascending by p, keys as tiebreak) and
+    ``__m__`` (row count), both windows partitioned by ``__ok__``.
+
+    Invalid p must not enter m or the ranking — ascending Spark sort puts
+    NULL FIRST, so one untestable feature (e.g. zero variance in both
+    groups) would seed BH's reverse running-min and reject everything
+    below it. The reference's statsmodels path never sees them (scipy
+    returns nan, pandas drops); here they rank among themselves and the
+    callers NULL their p_adj (rejected 0). Partition, never filter: a
+    filter on a p-value computed by an ops/special.py tail is pushed
+    below the projection that computes it, inlining the whole tail
+    expression into the predicate."""
     p = F.col(p_col)
-    valid = p.isNotNull() & ~F.isnan(p)
-    return df.filter(valid), df.filter(~(p.isNotNull() & ~F.isnan(p)))
+    part = Window.partitionBy("__ok__")
+    order = [p.asc()] + [F.col(k).asc() for k in key_cols]
+    return df.withColumn("__ok__", p.isNotNull() & ~F.isnan(p)).select(
+        "*",
+        F.row_number().over(part.orderBy(*order)).alias("__rn__"),
+        F.count(F.lit(1)).over(part).alias("__m__"),
+    )
+
+
+def _bh_step_up(p_col: str) -> F.Column:
+    """Unrounded BH-adjusted p over a :func:`_ranked` frame: reverse
+    running-min of p*m/rank, clamped to 1; NULL on invalid rows."""
+    tail = (
+        Window.partitionBy("__ok__")
+        .orderBy(F.desc("__rn__"))
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return F.when(
+        F.col("__ok__"),
+        F.least(
+            F.lit(1.0),
+            F.min((F.col(p_col) * F.col("__m__")) / F.col("__rn__")).over(tail),
+        ),
+    )
 
 
 def bh_adjust(
@@ -127,33 +156,19 @@ def bh_adjust(
     analytics.py:1663-1736): adds ``p_adj`` and ``rejected`` columns.
     Rank ascending by p (keys as tiebreak), reverse running-min of
     p*m/rank, clamp to 1. The frame is post-aggregation (one row per
-    feature) so the unpartitioned windows are dimension-sized.
-    NULL/NaN p-values are excluded from m and ranking (p_adj NULL,
-    rejected 0 — see :func:`_split_valid_p`)."""
-    df, invalid = _split_valid_p(df, p_col)
-    order = [F.col(p_col).asc()] + [F.col(k).asc() for k in key_cols]
-    r = df.select(
-        "*",
-        F.row_number().over(Window.orderBy(*order)).alias("__rn__"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("__m__"),
-    )
-    tail = Window.orderBy(F.desc("__rn__")).rowsBetween(Window.unboundedPreceding, 0)
-    p_adj = F.least(
-        F.lit(1.0), F.min((F.col(p_col) * F.col("__m__")) / F.col("__rn__")).over(tail)
-    )
-    out = (
-        r.withColumn("p_adj", F.round(p_adj, 9))
+    feature) so the windows are dimension-sized. NULL/NaN p-values are
+    excluded from m and ranking (p_adj NULL, rejected 0 — see
+    :func:`_ranked`)."""
+    out = _ranked(df, p_col, key_cols).withColumn("__bh__", _bh_step_up(p_col))
+    return (
+        out.withColumn("p_adj", F.round("__bh__", 9))
         .withColumn(
             # <= like statsmodels multipletests (and this module's
             # bh_twostage / pvalue_correction), on the UNROUNDED value
-            "rejected", F.when(p_adj <= F.lit(alpha), 1).otherwise(0).cast("int")
+            "rejected",
+            F.when(F.col("__bh__") <= F.lit(alpha), 1).otherwise(0).cast("int"),
         )
-        .drop("__rn__", "__m__")
-    )
-    return out.unionByName(
-        invalid.withColumn("p_adj", F.lit(None).cast("double")).withColumn(
-            "rejected", F.lit(0).cast("int")
-        )
+        .drop("__ok__", "__rn__", "__m__", "__bh__")
     )
 
 
@@ -168,26 +183,12 @@ def bh_twostage(
     scales the adjusted p-values by m0/m. Adds ``p_adj``, ``m0`` and
     ``rejected``. Same dimension-sized-frame window math as
     :func:`bh_adjust` (statsmodels' <= rejection mirrored exactly);
-    NULL/NaN p-values excluded the same way."""
-    df, invalid = _split_valid_p(df, p_col)
-    order = [F.col(p_col).asc()] + [F.col(k).asc() for k in key_cols]
-    r = df.select(
-        "*",
-        F.row_number().over(Window.orderBy(*order)).alias("__rn__"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("__m__"),
-    )
-    tail = Window.orderBy(F.desc("__rn__")).rowsBetween(Window.unboundedPreceding, 0)
-    bh = r.withColumn(
-        "__bh__",
-        F.least(
-            F.lit(1.0),
-            F.min((F.col(p_col) * F.col("__m__")) / F.col("__rn__")).over(tail),
-        ),
-    )
+    NULL/NaN p-values excluded the same way (m0 NULL as well)."""
+    bh = _ranked(df, p_col, key_cols).withColumn("__bh__", _bh_step_up(p_col))
     st = bh.withColumn(
         "__r1__",
         F.sum(F.when(F.col("__bh__") <= F.lit(alpha), 1).otherwise(0)).over(
-            Window.partitionBy()
+            Window.partitionBy("__ok__")
         ),
     )
     m = F.col("__m__")
@@ -197,16 +198,12 @@ def bh_twostage(
     rejected = F.when(
         active, F.col("__bh__") <= (F.lit(alpha) * m) / (m - r1)
     ).otherwise(F.col("__bh__") <= F.lit(alpha))
-    out = (
+    m0 = F.when(F.col("__ok__"), F.when(active, m - r1).otherwise(m))
+    return (
         st.withColumn("p_adj", F.round(p_adj, 9))
-        .withColumn("m0", F.when(active, m - r1).otherwise(m).cast("bigint"))
+        .withColumn("m0", m0.cast("bigint"))
         .withColumn("rejected", F.when(rejected, 1).otherwise(0).cast("int"))
-        .drop("__rn__", "__m__", "__bh__", "__r1__")
-    )
-    return out.unionByName(
-        invalid.withColumn("p_adj", F.lit(None).cast("double"))
-        .withColumn("m0", F.lit(None).cast("bigint"))
-        .withColumn("rejected", F.lit(0).cast("int"))
+        .drop("__ok__", "__rn__", "__m__", "__bh__", "__r1__")
     )
 
 
@@ -214,7 +211,7 @@ def anova_oneway(
     df: DataFrame, feature_col: str, group_col: str, value_col: str
 ) -> DataFrame:
     """Per-feature one-way ANOVA: (feature, n_groups, n_obs, f_stat,
-    p_value) — generic q_anova_oneway (calculate_anova,
+    p_value) — q_anova_oneway (calculate_anova,
     analytics.py:1408-1478)."""
     v = F.col(value_col).cast("double")
     # count(v), not count(*): NULL cells (e.g. measurements_ready with
@@ -246,7 +243,7 @@ def anova_oneway(
     )
     # ssw == 0 (every group internally constant — guaranteed by levene_bf
     # whenever all groups have exactly 2 observations): F is untestable
-    # here, not a job abort — NULL, absorbed by _split_valid_p.
+    # here, not a job abort — NULL, absorbed by the corrections (_ranked).
     f_raw = (F.col("ssb") / (F.col("k") - 1)) / _nz(
         F.col("ssw") / (F.col("n") - F.col("k"))
     )
@@ -947,42 +944,37 @@ def pvalue_correction(
     (1-(1-p)^m), 'holm' (step-down: running max of (m-rank+1)*p in
     ascending-p order, clamped to 1). Adds ``p_adj`` + ``rejected``
     (statsmodels' ``p_adj <= alpha``, equivalent to each method's
-    sequential rule). Post-aggregation frames only: the unpartitioned
-    windows are dimension-sized, exactly like :func:`bh_adjust`;
-    NULL/NaN p-values excluded the same way (m counts valid rows only —
-    bonferroni/sidak otherwise over-correct by the untestable count)."""
-    df, invalid = _split_valid_p(df, p_col)
+    sequential rule). Post-aggregation frames only: the windows are
+    dimension-sized, exactly like :func:`bh_adjust`; NULL/NaN p-values
+    excluded the same way (m counts valid rows only — bonferroni/sidak
+    otherwise over-correct by the untestable count)."""
+    r = _ranked(df, p_col, key_cols)
     p = F.col(p_col)
-    m = F.count(F.lit(1)).over(Window.partitionBy())
+    m = F.col("__m__")
+    if method == "bonferroni":
+        pr = F.least(F.lit(1.0), p * m)
+    elif method == "sidak":
+        pr = F.lit(1.0) - F.pow(F.lit(1.0) - p, m)
+    elif method == "holm":
+        head = (
+            Window.partitionBy("__ok__")
+            .orderBy("__rn__")
+            .rowsBetween(Window.unboundedPreceding, 0)
+        )
+        pr = F.least(F.lit(1.0), F.max((m - F.col("__rn__") + 1) * p).over(head))
+    else:
+        raise ValueError(f"unknown correction method {method!r}")
     # __pr__ holds the UNROUNDED adjusted p: rejection must compare the
     # true value against alpha (statsmodels), not the 9-dp display round —
     # a p_adj of 0.0500000004 rounds to alpha but is NOT rejected.
-    if method == "bonferroni":
-        out = df.withColumn("__pr__", F.least(F.lit(1.0), p * m))
-    elif method == "sidak":
-        out = df.withColumn("__pr__", F.lit(1.0) - F.pow(F.lit(1.0) - p, m))
-    elif method == "holm":
-        order = [p.asc()] + [F.col(k).asc() for k in key_cols]
-        r = df.select(
-            "*",
-            F.row_number().over(Window.orderBy(*order)).alias("__rn__"),
-            F.count(F.lit(1)).over(Window.partitionBy()).alias("__m__"),
+    out = r.withColumn("__pr__", F.when(F.col("__ok__"), pr))
+    return (
+        out.withColumn("p_adj", F.round("__pr__", 9))
+        .withColumn(
+            "rejected",
+            F.when(F.col("__pr__") <= F.lit(alpha), 1).otherwise(0).cast("int"),
         )
-        head = Window.orderBy("__rn__").rowsBetween(Window.unboundedPreceding, 0)
-        p_adj = F.least(
-            F.lit(1.0),
-            F.max((F.col("__m__") - F.col("__rn__") + 1) * p).over(head),
-        )
-        out = r.withColumn("__pr__", p_adj).drop("__rn__", "__m__")
-    else:
-        raise ValueError(f"unknown correction method {method!r}")
-    return out.withColumn("p_adj", F.round(F.col("__pr__"), 9)).withColumn(
-        "rejected",
-        F.when(F.col("__pr__") <= F.lit(alpha), 1).otherwise(0).cast("int"),
-    ).drop("__pr__").unionByName(
-        invalid.withColumn("p_adj", F.lit(None).cast("double")).withColumn(
-            "rejected", F.lit(0).cast("int")
-        )
+        .drop("__ok__", "__rn__", "__m__", "__pr__")
     )
 
 
@@ -1075,8 +1067,8 @@ def anova_twoway(
     order_cols: list[str],
     balance: bool = True,
 ) -> DataFrame:
-    """Two-way ANOVA with interaction — the generic spelling of
-    q_anova_twoway (run_two_way_anova, analytics.py:2390-2429;
+    """Two-way ANOVA with interaction — q_anova_twoway
+    (run_two_way_anova, analytics.py:2390-2429;
     statsmodels typ=2 over a crossed design, balanced closed form where
     Type I/II/III coincide). ``order_cols`` is the explicit total order
     used to trim every (a × b) cell to the global minimum cell count
@@ -1100,43 +1092,48 @@ def anova_twoway(
         F.col(value_col).cast("double").alias("v"),
         F.row_number().over(w).alias("rn"),
     )
-    counts = cellr.groupBy("fa", "fb").count()
+    # ONE collected action reads the design: the crossing check, the balance
+    # check and the trim count (a literal below, not a re-aggregated
+    # subquery inside the checkpoint job).
+    n_cells, n_a, n_b, lo, hi = (
+        cellr.groupBy("fa", "fb")
+        .count()
+        .agg(
+            F.count(F.lit(1)),
+            F.countDistinct("fa"),
+            F.countDistinct("fb"),
+            F.min("count"),
+            F.max("count"),
+        )
+        .first()
+    )
     # the closed form assumes a COMPLETE p×q crossing: a fully absent
     # (a, b) cell invalidates every cell-weighted divisor and df_err =
     # p·q·(n−1), and neither mode's trimming can conjure a missing cell
     # — refuse loudly (verified: on an incomplete 2×2 with pure noise
     # the un-guarded form reported interaction p = 0.014).
-    n_cells, n_a, n_b = counts.agg(
-        F.count(F.lit(1)),
-        F.countDistinct("fa"),
-        F.countDistinct("fb"),
-    ).first()
     if n_cells != n_a * n_b:
         raise ValueError(
             f"anova_twoway: incomplete crossing — {n_cells} populated cells "
             f"for a {n_a}×{n_b} design; every (factor_a, factor_b) cell "
             "needs at least one observation"
         )
-    mn = counts.agg(F.min("count").cast("bigint").alias("n"))
-    if balance:
-        bal = (
-            cellr.crossJoin(F.broadcast(mn))
-            .filter(F.col("rn") <= F.col("n"))
-            .select("fa", "fb", "v")
-            .localCheckpoint(eager=True)
+    # the closed-form SS partition is only valid on a balanced design;
+    # silently computing it on ragged cells would be wrong in every
+    # cell-weighted term — refuse loudly instead.
+    if not balance and lo != hi:
+        raise ValueError(
+            f"anova_twoway(balance=False): design is unbalanced "
+            f"(cell counts {lo}..{hi}); pass balance=True to trim "
+            "deterministically, or balance the design upstream"
         )
-    else:
-        # the closed-form SS partition is only valid on a balanced
-        # design; silently computing it on ragged cells would be wrong in
-        # every cell-weighted term — refuse loudly instead.
-        lo, hi = counts.agg(F.min("count"), F.max("count")).first()
-        if lo != hi:
-            raise ValueError(
-                f"anova_twoway(balance=False): design is unbalanced "
-                f"(cell counts {lo}..{hi}); pass balance=True to trim "
-                "deterministically, or balance the design upstream"
-            )
-        bal = cellr.select("fa", "fb", "v").localCheckpoint(eager=True)
+    # the balanced frame feeds six scalar aggregates: checkpoint it once
+    # or each re-runs the corpus-scale balancing window sort
+    bal = (
+        cellr.filter(F.col("rn") <= F.lit(lo))
+        .select("fa", "fb", "v")
+        .localCheckpoint(eager=True)
+    )
     ca = bal.groupBy("fa").agg(F.sum("v").alias("s_a"))
     cb = bal.groupBy("fb").agg(F.sum("v").alias("s_b"))
     cab = bal.groupBy("fa", "fb").agg(F.sum("v").alias("s_ab"))
@@ -1151,7 +1148,7 @@ def anova_twoway(
         .crossJoin(F.broadcast(cab.agg(F.sum(F.col("s_ab") * F.col("s_ab")).alias("sum_ab2"))))
         .crossJoin(F.broadcast(ca.agg(F.count(F.lit(1)).cast("bigint").alias("p"))))
         .crossJoin(F.broadcast(cb.agg(F.count(F.lit(1)).cast("bigint").alias("q"))))
-        .crossJoin(F.broadcast(mn))
+        .withColumn("n", F.lit(lo).cast("bigint"))
     )
     cf = (F.col("g") * F.col("g")) / F.col("nt")
     ss = sums.select(
@@ -1212,7 +1209,7 @@ def anova_twoway(
 def rm_anova(
     df: DataFrame, subject_col: str, condition_col: str, value_col: str
 ) -> DataFrame:
-    """One-way repeated-measures ANOVA — generic q_rm_anova
+    """One-way repeated-measures ANOVA — q_rm_anova
     (calculate_repeated_measures_anova, analytics.py:1424-1438; pingouin
     rm_anova's uncorrected F) over the (subject × condition) cell-mean
     matrix; subjects missing any condition are dropped to keep the
@@ -1282,7 +1279,7 @@ def rm_anova(
 def fisher_enrichment(
     df: DataFrame, term_col: str, foreground: Column, id_col: str | None = None
 ) -> DataFrame:
-    """Fisher-exact over-representation enrichment + BH — generic
+    """Fisher-exact over-representation enrichment + BH —
     q_enrichment_fisher (run_site_regulation_enrichment / run_fisher,
     analytics.py:1908-2048). ``foreground`` is a boolean Column marking
     foreground membership; rows group into annotation terms by
@@ -1333,8 +1330,8 @@ def _fisher_enrichment_tail(tot: DataFrame, term_col: str) -> DataFrame:
     n_all) counts frame — shared by both population models above."""
     pv = tot.select(
         term_col,
-        "k",
-        "cat_n",
+        F.col("k").alias("fg_count"),
+        F.col("cat_n").alias("bg_count"),
         F.round(
             F.least(
                 special.hypergeom_sf_spark(
@@ -1345,25 +1342,7 @@ def _fisher_enrichment_tail(tot: DataFrame, term_col: str) -> DataFrame:
             9,
         ).alias("p_value"),
     )
-    r = pv.select(
-        term_col,
-        "k",
-        "cat_n",
-        "p_value",
-        F.row_number().over(Window.orderBy("p_value", term_col)).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("m"),
-    )
-    tail = Window.orderBy(F.desc("rn")).rowsBetween(Window.unboundedPreceding, 0)
-    p_adj = F.least(
-        F.lit(1.0), F.min((F.col("p_value") * F.col("m")) / F.col("rn")).over(tail)
-    )
-    return r.select(
-        F.col(term_col),
-        F.col("k").alias("fg_count"),
-        F.col("cat_n").alias("bg_count"),
-        "p_value",
-        F.round(p_adj, 9).alias("p_adj"),
-    )
+    return bh_adjust(pv, "p_value", [term_col]).drop("rejected")
 
 
 def ttest_permutation_fdr(
@@ -1507,26 +1486,11 @@ def ttest_permutation_fdr(
     # the tail-min on raw float p would flip tie blocks on ~1e-15
     # engine-arithmetic differences when many features share a p value
     rr = pp.select(
-        "feat",
-        "t_obs",
-        F.round("p_perm", 9).alias("p_perm"),
-        F.row_number()
-        .over(
-            Window.orderBy(F.round("p_perm", 9).asc(), F.col("feat").asc())
-        )
-        .alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("m"),
-    )
-    tail = Window.orderBy(F.desc("rn")).rowsBetween(Window.unboundedPreceding, 0)
-    p_adj = F.least(
-        F.lit(1.0), F.min((F.col("p_perm") * F.col("m")) / F.col("rn")).over(tail)
-    )
-    return rr.select(
         F.col("feat").alias(feature_col),
         F.round("t_obs", 6).alias("t_stat"),
-        "p_perm",
-        F.round(p_adj, 9).alias("p_adj"),
+        F.round("p_perm", 9).alias("p_perm"),
     )
+    return bh_adjust(rr, "p_perm", [feature_col]).drop("rejected")
 
 
 # ----------------------------------------------------------------------
@@ -1732,24 +1696,9 @@ def sam_permutation_fdr(
     # BH on the ROUNDED p — see ttest_permutation_fdr: raw-float ranking
     # flips tie blocks on ~1e-15 engine-arithmetic differences
     rr = pp.select(
-        "feat",
-        "d_obs",
-        F.round("p_perm", 9).alias("p_perm"),
-        F.row_number()
-        .over(
-            Window.orderBy(F.round("p_perm", 9).asc(), F.col("feat").asc())
-        )
-        .alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy()).alias("m"),
-    )
-    tail = Window.orderBy(F.desc("rn")).rowsBetween(Window.unboundedPreceding, 0)
-    p_adj = F.least(
-        F.lit(1.0), F.min((F.col("p_perm") * F.col("m")) / F.col("rn")).over(tail)
-    )
-    return rr.select(
         F.col("feat").alias(feature_col),
         F.round(F.lit(s0), 9).alias("s0"),
         F.round("d_obs", 6).alias("d_stat"),
-        "p_perm",
-        F.round(p_adj, 9).alias("p_adj"),
+        F.round("p_perm", 9).alias("p_perm"),
     )
+    return bh_adjust(rr, "p_perm", [feature_col]).drop("rejected")

@@ -1,9 +1,11 @@
-"""Analysis dispatcher (≙ analytics_factory) + generic stats spellings.
+"""Analysis dispatcher (≙ analytics_factory) + the ops/stats operators.
 
-The load-bearing check: the column-parameterized operators in
-ops/stats.py must reproduce the CATALOG's hash-verified outputs when
-pointed at the same framing — the generic API and the oracle-checked
-spellings may never drift apart.
+The stats catalog queries are thin framings over the ops/stats.py
+operators the dispatcher hands user frames to, so the DuckDB oracle
+gate certifies the code users call. ``test_stats_query_calls_its_operator``
+pins that delegation; the ``*_matches_catalog`` tests check that the
+dispatcher's argument plumbing (column names, defaults, corrections)
+reaches the same hash-verified outputs.
 """
 
 from __future__ import annotations
@@ -124,6 +126,75 @@ def test_bh_twostage_matches_catalog(spark, lineitem):
     adj = stats.bh_twostage(welch, "p_value", ["l_returnflag"])
     catalog = CATALOG["q_ttest_fdr_twostage"].spark_fn(spark, SF_DIR)
     assert _sorted_pdf(adj).equals(_sorted_pdf(catalog))
+
+
+# every stats catalog query → the ops/stats operator(s) it must call
+STATS_QUERY_OPS = {
+    "q_welch_ttest": ["welch_ttest"],
+    "q_ttest_fdr": ["welch_ttest", "bh_adjust"],
+    "q_ttest_fdr_twostage": ["welch_ttest", "bh_twostage"],
+    "q_anova_oneway": ["anova_oneway"],
+    "q_quantile_normalize": ["quantile_normalize"],
+    "q_median_polish": ["median_polish"],
+    "q_anova_twoway": ["anova_twoway"],
+    "q_rm_anova": ["rm_anova"],
+    "q_enrichment_fisher": ["fisher_enrichment"],
+    "q_tukey_hsd": ["tukey_hsd"],
+    "q_bootstrap_meandiff": ["bootstrap_meandiff"],
+    "q_wilcoxon_signed": ["wilcoxon_signed_rank"],
+    "q_normality_check": ["normality_test"],
+    "q_effect_sizes": ["effect_sizes"],
+    "q_levene_bf": ["levene_bf"],
+    "q_mannwhitney": ["mann_whitney_u"],
+    "q_spearman_corr": ["correlation"],
+}
+
+
+@pytest.mark.parametrize("query", sorted(STATS_QUERY_OPS))
+def test_stats_query_calls_its_operator(spark, monkeypatch, query):
+    """The catalog keeps no second Spark spelling of a library operator:
+    building the query must go through ops/stats.py, so its DuckDB twin
+    certifies the function run_analysis dispatches to."""
+    from ckg_spark.ops import stats
+
+    called = []
+    for name in STATS_QUERY_OPS[query]:
+
+        def recording(*args, _real=getattr(stats, name), _name=name, **kwargs):
+            called.append(_name)
+            return _real(*args, **kwargs)
+
+        monkeypatch.setattr(stats, name, recording)
+    CATALOG[query].spark_fn(spark, SF_DIR)
+    assert set(called) == set(STATS_QUERY_OPS[query]), (query, called)
+
+
+def test_corrections_plan_size_stays_linear(spark, lineitem):
+    """A correction over a computed p-value must not copy the p-value's
+    expression tree: filtering on the Welch t tail (a 200-level
+    incomplete-beta continued fraction) lets Catalyst push the predicate
+    below the projection and inline the whole tail into it (~39x the
+    input's optimized plan). Partitioning the windows by the validity
+    flag keeps each correction's plan within 2x of its input's."""
+    from ckg_spark.ops import stats
+
+    def size(df):
+        return len(df._jdf.queryExecution().optimizedPlan().toString())
+
+    welch = stats.welch_ttest(
+        lineitem, "l_returnflag", "l_linestatus", "l_quantity", "F", "O"
+    ).select("l_returnflag", "p_value")
+    corrections = {
+        "bh_adjust": stats.bh_adjust(welch, "p_value", ["l_returnflag"]),
+        "bh_twostage": stats.bh_twostage(welch, "p_value", ["l_returnflag"]),
+    }
+    for method in ("bonferroni", "sidak", "holm"):
+        corrections[method] = stats.pvalue_correction(
+            welch, "p_value", ["l_returnflag"], method=method
+        )
+    base = size(welch)
+    for name, df in corrections.items():
+        assert size(df) <= 2 * base, (name, size(df), base)
 
 
 def _twostage_reference(pvals, alpha=0.05):

@@ -1297,28 +1297,6 @@ def test_linkage_matrix_matches_naive_agglomerative(spark):
     assert len(z) == len(nodes) - 1 and z[-1][3] == len(nodes)
 
 
-def test_ngram_overlap_broadcast_and_symmetric_paths_agree(spark):
-    """The broadcast-eval decontamination plan (eval shingles broadcast,
-    train never shuffles) must produce exactly the symmetric
-    shingle-grouped plan's pairs."""
-    from ckg_spark.ops.curation import ngram_overlap_split, split_u
-
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    ev = split_u(F.col("doc_id")) >= 0.9
-    a = sorted(
-        map(tuple, ngram_overlap_split(d, "doc_id", "text", ev, n=8).collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            ngram_overlap_split(
-                d, "doc_id", "text", ev, n=8, broadcast_eval=False
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
 def _seeded_graph(n=24, seed=7):
     """Deterministic sparse graph: edge (i, j) present iff md5(i,j,seed)
     lands below a threshold. Independent of the engine's hashing."""
