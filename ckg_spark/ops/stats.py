@@ -1221,31 +1221,32 @@ def rm_anova(
     # downstream sum (same count-vs-sum mismatch as anova_twoway's).
     # try_cast: ANSI mode — plain cast throws on non-castable strings.
     df = df.filter(F.col(value_col).try_cast("double").isNotNull())
-    cell = df.groupBy(subject_col, condition_col).agg(
-        F.avg(F.col(value_col).cast("double")).alias("x")
+    # the cell matrix feeds the design width k and the balanced frame:
+    # checkpoint it once instead of re-running the scan and the cell
+    # aggregation per branch
+    cell = (
+        df.groupBy(subject_col, condition_col)
+        .agg(F.avg(F.col(value_col).cast("double")).alias("x"))
+        .localCheckpoint(eager=True)
     )
-    kk = cell.agg(F.countDistinct(condition_col).cast("bigint").alias("k"))
-    cnt = cell.groupBy(subject_col).agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-    b = (
-        cell.join(cnt, subject_col)
-        .crossJoin(F.broadcast(kk))
-        .filter(F.col("c") == F.col("k"))
-        .select(subject_col, condition_col, "x")
+    k = cell.agg(F.countDistinct(condition_col)).first()[0]
+    # keep subjects with a cell in every condition; the window's exchange
+    # by subject also serves the per-subject aggregate
+    b = cell.withColumn(
+        "c", F.count(F.lit(1)).over(Window.partitionBy(subject_col))
+    ).filter(F.col("c") == F.lit(k))
+    subj = b.groupBy(subject_col).agg(
+        F.sum("x").alias("p_i"), F.sum(F.col("x") * F.col("x")).alias("q_i")
     )
-    subj = b.groupBy(subject_col).agg(F.sum("x").alias("p_i"))
     cond = b.groupBy(condition_col).agg(F.sum("x").alias("t_j"))
     s1 = subj.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("p_i") * F.col("p_i")).alias("sum_p2"),
         F.sum("p_i").alias("g"),
+        F.sum("q_i").alias("ss"),
     )
     s2 = cond.agg(F.sum(F.col("t_j") * F.col("t_j")).alias("sum_t2"))
-    s3 = b.agg(F.sum(F.col("x") * F.col("x")).alias("ss"))
-    sq = (
-        s1.crossJoin(F.broadcast(s2))
-        .crossJoin(F.broadcast(s3))
-        .crossJoin(F.broadcast(kk))
-    )
+    sq = s1.crossJoin(F.broadcast(s2)).withColumn("k", F.lit(k).cast("bigint"))
     corr = (F.col("g") * F.col("g")) / (F.col("n") * F.col("k"))
     sq = sq.select(
         "n",

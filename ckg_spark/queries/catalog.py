@@ -2638,9 +2638,10 @@ def q_rm_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     analytics.py:1424-1438, pingouin rm_anova's uncorrected F) over the
     (subject=user, condition=event_type) cell-mean matrix. Subjects
     missing any condition are dropped to keep the design balanced. The
-    partition is SS_total = SS_conditions + SS_subjects + SS_error; all
-    four sums come from ONE pass of shaped aggregations — no driver
-    collect, the scalar frames combine by broadcast cross-join."""
+    partition is SS_total = SS_conditions + SS_subjects + SS_error; the
+    cell matrix is computed once (checkpointed), the design width k is
+    its one scalar read on the driver, and the per-subject and
+    per-condition sums combine by broadcast cross-join."""
     from ..ops.stats import rm_anova
 
     return rm_anova(_t(spark, sf_dir, "events"), "user_id", "event_type", "value")

@@ -11,6 +11,40 @@ would set on a 1000-executor cluster reading 100 TB:
 - shuffle partitions sized from the core count (override with
   SPARK_GRAFT_SHUFFLE_PARTITIONS); on a real cluster this would be
   2-3x total executor cores, with AQE coalescing the tail.
+- one JIT/GC policy, ``JVM_OPTIONS``, for every JVM the engine starts
+  (see below).
+
+JVM policy. A build is a batch job on a fresh JVM, and most of what its
+first operation costs is not the engine's work. On a 4-vCPU host (JDK 17
+defaults) the first ``kg_dense`` operation of ``perfbench/run.py`` used
+73 CPU-s in the JVM: 38 in the C2 compiler threads, 7 in C1 and 12 in the
+executor task threads. So the lever is the JVM's compile policy, not a
+hot spot in engine code:
+
+- ``-XX:+UseParallelGC``: the throughput collector, for a batch job with no
+  pause-time target. Its write barriers are smaller than G1's: less code
+  for C2 to compile and less work per reference store (measured as C2 and
+  executor-thread time, not as GC-thread time).
+- ``Tier4InvocationThreshold``/``Tier4BackEdgeThreshold`` at ten times and
+  ``Tier4CompileThreshold`` at four times the JDK defaults (5000, 40000,
+  15000): C2 compiles only code that stays hot, instead of the many
+  planning and set-up methods that run a few thousand times and never
+  again. A long job reaches these counts within milliseconds on its hot
+  loops, so its steady state does not change.
+
+``get_spark`` passes it as ``spark.driver.defaultJavaOptions``, which the
+launcher puts BEFORE ``spark.driver.extraJavaOptions``: a caller's flags
+still win. ``scripts/submit_build.py`` passes it to the driver and the
+executors. Measured in ten alternating runs per side (BENCH.md, "One JIT/GC
+policy"): curate's first-operation CPU 53.8 -> 40.7 s and set-up CPU 27.4
+-> 19.2 s (medians); C2 time on kg_dense's first operation 38 -> 18 s; a
+warm kg_dense operation and a 20k-doc build take the same wall time.
+Each flag group pays on its own (curate first-operation CPU, medians of
+two: 54.7 s -> 43.6 s with the thresholds alone, 50.5 s with ParallelGC
+alone, 40.8 s with both). Rejected after measurement: C1 only
+(``TieredStopAtLevel=1``; warm operation 12.6 -> 18 s wall),
+``CICompilerCount=2``, ``CompileThresholdScaling`` and
+``-TieredCompilation`` (noise or worse when warm).
 """
 
 from __future__ import annotations
@@ -18,6 +52,13 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+JVM_OPTIONS = " ".join([
+    "-XX:+UseParallelGC",
+    "-XX:Tier4InvocationThreshold=50000",
+    "-XX:Tier4CompileThreshold=60000",
+    "-XX:Tier4BackEdgeThreshold=400000",
+])
 
 
 def get_spark(
@@ -82,6 +123,7 @@ def get_spark(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(16, cores)}g"),
         )
+        .config("spark.driver.defaultJavaOptions", JVM_OPTIONS)
         .config("spark.ui.enabled", "false")
         # the status store retains per-execution metadata EVEN with the UI
         # off — including full physical-plan description strings. This

@@ -17,6 +17,10 @@ import tempfile
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from ckg_spark.session import JVM_OPTIONS  # noqa: E402
+
 DEFAULT_MASTER = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
 
 
@@ -47,6 +51,8 @@ def submit(job_script: str, job_args: list[str], master: str) -> int:
         "--master", master,
         "--conf", "spark.sql.adaptive.enabled=true",
         "--conf", "spark.sql.execution.arrow.pyspark.enabled=true",
+        "--conf", f"spark.driver.defaultJavaOptions={JVM_OPTIONS}",
+        "--conf", f"spark.executor.defaultJavaOptions={JVM_OPTIONS}",
         "--py-files", zip_path,
         os.path.join(REPO, "scripts", job_script),
         *job_args,

@@ -852,6 +852,52 @@ def test_anova_twoway_null_values_random_frames(spark):
             assert got[s]["f_stat"] == pytest.approx(fstat, abs=2e-5), (trial, s)
 
 
+def test_rm_anova_random_designs(spark):
+    """RM-ANOVA against numpy's residual form on the cell-mean matrix:
+    SS_err = sum of squared (x - row mean - column mean + grand mean),
+    not the operator's sum-of-squares differences. Ragged cells, NULL
+    values and subjects missing a condition (which must drop)."""
+    from ckg_spark.ops.stats import rm_anova
+
+    rng = np.random.default_rng(855)
+    for trial in range(3):
+        k = int(rng.integers(2, 5))
+        rows = []
+        for si in range(int(rng.integers(4, 9))):
+            shift = float(rng.normal(0, 2))
+            skip = int(rng.integers(0, k)) if rng.random() < 0.25 else None
+            for ci in range(k):
+                if ci == skip:
+                    continue
+                for _ in range(int(rng.integers(1, 4))):
+                    v = None if rng.random() < 0.1 else float(
+                        np.round(rng.normal(shift + ci, 1), 3)
+                    )
+                    rows.append((f"s{si}", f"c{ci}", v))
+        cells = {}
+        for s, c, v in rows:
+            if v is not None:
+                cells.setdefault(s, {}).setdefault(c, []).append(v)
+        conds = sorted({c for cs in cells.values() for c in cs})
+        x = np.array([
+            [np.mean(cs[c]) for c in conds]
+            for cs in cells.values() if len(cs) == len(conds)
+        ])
+        n, kk = x.shape
+        if n < 2 or kk < 2:
+            continue
+        resid = x - x.mean(axis=1, keepdims=True) - x.mean(axis=0) + x.mean()
+        ss_cond = n * ((x.mean(axis=0) - x.mean()) ** 2).sum()
+        fstat = (ss_cond / (kk - 1)) / ((resid**2).sum() / ((n - 1) * (kk - 1)))
+        df = spark.createDataFrame(rows, schema="subj string, cond string, val double")
+        (got,) = rm_anova(df, "subj", "cond", "val").collect()
+        assert (got["n_subjects"], got["n_conditions"]) == (n, kk), trial
+        assert got["f_stat"] == pytest.approx(fstat, rel=1e-6, abs=2e-6), trial
+        assert got["p_value"] == pytest.approx(
+            _f_sf_subst(fstat, kk - 1, (n - 1) * (kk - 1)), abs=1e-6
+        ), trial
+
+
 def test_rm_anova_all_null_cell_drops_subject(spark):
     from ckg_spark.ops.stats import rm_anova
 

@@ -32,3 +32,27 @@ def test_script_compiles_and_imports_resolve(path, tmp_path):
             for alias in node.names:
                 if alias.name.startswith("ckg_spark"):
                     importlib.import_module(alias.name)
+
+
+def test_submit_passes_the_jvm_policy_to_driver_and_executors(monkeypatch, tmp_path):
+    """A cluster run's driver and executors get the same JIT/GC policy as
+    ``get_spark``'s local JVM. The command line is captured; nothing runs."""
+    import subprocess
+
+    from ckg_spark.session import JVM_OPTIONS
+
+    monkeypatch.syspath_prepend(os.path.join(REPO, "scripts"))
+    import submit_build
+
+    calls = []
+    monkeypatch.setattr(submit_build.tempfile, "mkdtemp", lambda prefix: str(tmp_path))
+    monkeypatch.setattr(submit_build, "build_zip", lambda dest: os.path.join(dest, "ckg.zip"))
+    monkeypatch.setattr(
+        subprocess, "run", lambda cmd, **kw: calls.append(cmd) or subprocess.CompletedProcess(cmd, 0)
+    )
+    assert submit_build.submit("build_job.py", ["--pages", "p"], "local[2]") == 0
+    (cmd,) = calls
+    confs = [cmd[i + 1] for i, a in enumerate(cmd) if a == "--conf"]
+    assert f"spark.driver.defaultJavaOptions={JVM_OPTIONS}" in confs
+    assert f"spark.executor.defaultJavaOptions={JVM_OPTIONS}" in confs
+    assert cmd[-3:] == [os.path.join(REPO, "scripts", "build_job.py"), "--pages", "p"]
