@@ -196,8 +196,9 @@ def ivf_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Probe the nprobe nearest cells only, then exact cosine within them.
-    Operates on an in-memory cell-assigned frame; for the scan-level
-    pruning path use :func:`write_cell_partitioned` + :func:`ivf_topk_pruned`."""
+    Operates on any cell-assigned frame; over the storage that
+    :func:`write_cell_partitioned` lays out, the cell filter prunes the
+    scan (:func:`ivf_topk_pruned`)."""
     probe = _probe_cells(centroids, query, nprobe)
     pruned = embeddings_with_cells.filter(F.col("cell").isin(probe))
     return brute_force_topk(pruned, query, k=k, id_col=id_col, vec_col=vec_col)
@@ -223,9 +224,10 @@ def ivf_topk_pruned(
     """IVF probe against cell-partitioned storage — the ``cell IN (...)``
     filter reaches the scan as a PartitionFilter (plan-asserted in
     tests/test_plans.py), so only the probed cells' files are read."""
-    probe = _probe_cells(centroids, query, nprobe)
-    pruned = spark.read.parquet(index_path).filter(F.col("cell").isin(probe))
-    return brute_force_topk(pruned, query, k=k, id_col=id_col, vec_col=vec_col)
+    return ivf_topk(
+        spark.read.parquet(index_path), centroids, query,
+        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
+    )
 
 
 def cosine_self_pairs(

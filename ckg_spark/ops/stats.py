@@ -15,7 +15,9 @@ p-values come from ops/special.py's dual-backend tails.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -1346,7 +1348,12 @@ def _fisher_enrichment_tail(tot: DataFrame, term_col: str) -> DataFrame:
     return bh_adjust(pv, "p_value", [term_col]).drop("rejected")
 
 
-def ttest_permutation_fdr(
+# ----------------------------------------------------------------------
+# Label-permutation FDR — one pass shared by the t-test and SAM
+# ----------------------------------------------------------------------
+
+
+def _permutation_base(
     df: DataFrame,
     feature_col: str,
     group_col: str,
@@ -1354,31 +1361,15 @@ def ttest_permutation_fdr(
     group_a: str,
     group_b: str,
     rid_col: str,
-    permutations: int = 20,
-) -> DataFrame:
-    """Permutation-based FDR for the per-feature two-group t-test —
-    the scipy/R-free analog of the reference's SAMR route
-    (apply_pvalue_permutation_fdrcorrection, analytics.py:923-989;
-    run_ttest dispatches to SAMR when permutations>0,
-    analytics.py:1239-1260). ``run_analysis(df, "ttest",
-    {"permutations": K, "rid_col": ...})`` routes here.
-
-    The K label permutations are DETERMINISTIC: rows rank by the
-    lowbias32 uniform keyed on (rid, k) and the first n_a ranks take
-    ``group_a`` — a true label permutation preserving group sizes, which
-    is why ``rid_col`` must uniquely identify rows. The K-fold expansion
-    is one explode; each permutation's Welch t reuses one conditional
-    aggregation; p_perm = (1 + #{|t_k| >= |t_obs|}) / (K+1), then BH
-    across features. Hash-verified against the unrolled DuckDB twin via
-    q_ttest_permutation_fdr.
-
-    Output: (feature_col, t_stat, p_perm, p_adj).
-    """
-    from .curation import split_u
-
+    permutations: int,
+    op: str,
+) -> tuple[int, DataFrame]:
+    """``K`` and the ``(feat, rid, v, is_f)`` frame a two-group
+    permutation test runs on, after the contract checks both permutation
+    operators share (``op`` names the caller in their errors)."""
     K = int(permutations)
     if K <= 0:
-        raise ValueError("ttest_permutation_fdr: permutations must be > 0")
+        raise ValueError(f"{op}: permutations must be > 0")
     # the permutation key is rid*131+k: a non-numeric rid would throw a
     # cryptic ANSI NumberFormatException at action time deep in the plan
     # — validate the contract up front instead
@@ -1388,54 +1379,69 @@ def ttest_permutation_fdr(
         or rid_type.startswith("decimal")
     ):
         raise ValueError(
-            f"ttest_permutation_fdr: rid_col {rid_col!r} must be an "
-            f"integer column (got {rid_type}); hash string ids first, "
-            "e.g. F.xxhash64(col)"
+            f"{op}: rid_col {rid_col!r} must be an integer column (got "
+            f"{rid_type}); hash string ids first, e.g. F.xxhash64(col)"
         )
-    base = df.filter(F.col(group_col).isin([group_a, group_b])).select(
+    return K, df.filter(F.col(group_col).isin([group_a, group_b])).select(
         F.col(feature_col).alias("feat"),
         F.col(rid_col).alias("rid"),
         F.col(value_col).cast("double").alias("v"),
         (F.col(group_col) == F.lit(group_a)).alias("is_f"),
     )
 
-    def t_stat_agg():
-        fv = F.when(F.col("is_f"), F.col("v"))
-        ov = F.when(~F.col("is_f"), F.col("v"))
-        return (F.avg(fv) - F.avg(ov)) / F.sqrt(
-            F.var_samp(fv) / F.count(fv) + F.var_samp(ov) / F.count(ov)
-        )
 
-    # Mirror welch_ttest's emission contract (the permutations=0 route of
-    # the same dispatch): a feature needs >1 non-null value in BOTH groups
-    # to have a defined t. Without this, a 0/1-row group yields NULL t_obs
-    # and NULL t_k, the exceedance counts NULL comparisons as 0, and the
-    # feature lands at p_perm = 1/(K+1) — a spuriously strong p that also
-    # seeds the BH tail-min for every other feature. n1 (the permutation
-    # label-block size) stays the raw group-a ROW count so label
-    # permutations preserve group sizes even with null values present;
-    # the filter is on non-null VALUE counts, exactly like welch_ttest.
-    # Downstream inner joins (lab←cnt, pp=obs⋈pt) prune dropped features
-    # from the output and from the BH ranking's m.
-    cnt = (
+def _permutation_observed(base: DataFrame, **stats: Column) -> DataFrame:
+    """Per-feature ``(feat, n1, n1v, n2v, *stats)`` over the observed
+    labels, for the features a permutation test can score.
+
+    Mirrors welch_ttest's emission contract (the permutations=0 route of
+    the t-test dispatch): a feature needs >1 non-null value in BOTH
+    groups to have a defined statistic. Without this gate a 0/1-row group
+    yields a NULL observed and NULL permuted statistic, the exceedance
+    counts NULL comparisons as 0, and the feature lands at p_perm =
+    1/(K+1) — a spuriously strong p that also seeds the BH tail-min for
+    every other feature. n1 (the permutation label-block size) stays the
+    raw group-a ROW count so label permutations preserve group sizes
+    even with null values present; the gate is on non-null VALUE counts.
+    :func:`_permutation_p` inner-joins on this frame, so a dropped
+    feature leaves the output and the BH ranking's m."""
+    fv = F.when(F.col("is_f"), F.col("v"))
+    ov = F.when(~F.col("is_f"), F.col("v"))
+    return (
         base.groupBy("feat")
         .agg(
             F.sum(F.when(F.col("is_f"), 1).otherwise(0)).cast("bigint").alias("n1"),
-            F.count(F.when(F.col("is_f"), F.col("v"))).alias("n1v"),
-            F.count(F.when(~F.col("is_f"), F.col("v"))).alias("n2v"),
+            F.count(fv).alias("n1v"),
+            F.count(ov).alias("n2v"),
+            *(c.alias(name) for name, c in stats.items()),
         )
         .filter((F.col("n1v") > 1) & (F.col("n2v") > 1))
-        .select("feat", "n1")
     )
-    obs = base.groupBy("feat").agg(t_stat_agg().alias("t_obs"))
+
+
+def _permutation_p(
+    base: DataFrame, obs: DataFrame, stat: Callable[[], Column], K: int
+) -> DataFrame:
+    """The deterministic label-permutation pass of both permutation
+    operators: ``(feat, stat_obs, p_perm)`` for every feature of ``obs``
+    (``(feat, n1, stat_obs)``, the features that pass the gate).
+
+    Permutation k ranks a feature's rows by the lowbias32 uniform keyed
+    on (rid, k) and the first n1 ranks take group a — a true label
+    permutation preserving group sizes, which is why the rid must
+    uniquely identify rows. ``stat()`` builds the per-(feat, k)
+    aggregate over the relabeled ``is_f``/``v``; p_perm = (1 + #{|stat_k|
+    >= |stat_obs|}) / (K+1), rounded to 9 digits for the caller's BH."""
+    from .curation import split_u
+
     # ONE corpus-sized shuffle for the whole permutation pass:
     # repartition the N input rows by feat BEFORE the K-way explode so
     # the K*N exploded rows never shuffle — HashPartitioning([feat])
     # satisfies the window's ClusteredDistribution([feat, k]) (hash keys
     # are a subset of the clustering keys) and likewise both downstream
-    # aggregations, keeping the rank sort and the moment aggregates
-    # in-partition with bit-identical results. The previous spelling
-    # exploded first and shuffled K* the data into the window.
+    # aggregations, keeping the rank sort and the per-permutation
+    # aggregates in-partition with bit-identical results
+    # (tests/test_plans.py::test_permutation_explode_sits_above_one_feat_exchange).
     perm = (
         base.repartition(F.col("feat"))
         .select(
@@ -1454,42 +1460,75 @@ def ttest_permutation_fdr(
         F.col("u").asc(), F.col("rid").asc(), F.col("v").asc_nulls_first()
     )
     ranked = perm.select("feat", "v", "k", F.row_number().over(w).alias("rn"))
-    lab = ranked.join(F.broadcast(cnt), "feat").select(
+    lab = ranked.join(F.broadcast(obs.select("feat", "n1")), "feat").select(
         "feat", "k", "v", (F.col("rn") <= F.col("n1")).alias("is_f")
     )
-    pt = lab.groupBy("feat", "k").agg(t_stat_agg().alias("t_k"))
-    # exceedance compares ROUNDED |t|: integer-valued inputs make some
+    pt = lab.groupBy("feat", "k").agg(stat().alias("stat_k"))
+    # exceedance compares ROUNDED |stat|: integer-valued inputs make some
     # permutations MATHEMATICALLY tied with the observed statistic, and
     # raw-float >= lets summation-order jitter decide the tie — flipping
     # the count between engines (and between DuckDB runs). Rounding both
     # sides to 9 digits makes ties compare equal deterministically.
-    pp = (
-        obs.join(pt, "feat")
-        .groupBy("feat", "t_obs")
-        .agg(
-            (
-                (
-                    F.lit(1.0)
-                    + F.sum(
-                        F.when(
-                            F.round(F.abs(F.col("t_k")), 9)
-                            >= F.round(F.abs(F.col("t_obs")), 9),
-                            1,
-                        ).otherwise(0)
-                    )
-                )
-                / F.lit(float(K + 1))
-            ).alias("p_perm")
-        )
-    )
-    # BH runs on the ROUNDED p (a fixed function of the integer
+    # BH then runs on the ROUNDED p (a fixed function of the integer
     # exceedance count, so bit-identical across engines): ranking and
     # the tail-min on raw float p would flip tie blocks on ~1e-15
-    # engine-arithmetic differences when many features share a p value
-    rr = pp.select(
+    # engine-arithmetic differences when many features share a p value.
+    exceed = F.when(
+        F.round(F.abs(F.col("stat_k")), 9) >= F.round(F.abs(F.col("stat_obs")), 9), 1
+    ).otherwise(0)
+    return (
+        obs.join(pt, "feat")
+        .groupBy("feat", "stat_obs")
+        .agg(
+            F.round((F.lit(1.0) + F.sum(exceed)) / F.lit(float(K + 1)), 9).alias(
+                "p_perm"
+            )
+        )
+    )
+
+
+def ttest_permutation_fdr(
+    df: DataFrame,
+    feature_col: str,
+    group_col: str,
+    value_col: str,
+    group_a: str,
+    group_b: str,
+    rid_col: str,
+    permutations: int = 20,
+) -> DataFrame:
+    """Permutation-based FDR for the per-feature two-group t-test —
+    the scipy/R-free analog of the reference's SAMR route
+    (apply_pvalue_permutation_fdrcorrection, analytics.py:923-989;
+    run_ttest dispatches to SAMR when permutations>0,
+    analytics.py:1239-1260). ``run_analysis(df, "ttest",
+    {"permutations": K, "rid_col": ...})`` routes here.
+
+    The K label permutations are deterministic and preserve group sizes
+    (:func:`_permutation_p`), so ``rid_col`` must uniquely identify rows;
+    each permutation's Welch t reuses one conditional aggregation, then
+    BH across features. Hash-verified against the DuckDB twin via
+    q_ttest_permutation_fdr.
+
+    Output: (feature_col, t_stat, p_perm, p_adj).
+    """
+    K, base = _permutation_base(
+        df, feature_col, group_col, value_col, group_a, group_b, rid_col,
+        permutations, "ttest_permutation_fdr",
+    )
+
+    def t_stat_agg():
+        fv = F.when(F.col("is_f"), F.col("v"))
+        ov = F.when(~F.col("is_f"), F.col("v"))
+        return (F.avg(fv) - F.avg(ov)) / F.sqrt(
+            F.var_samp(fv) / F.count(fv) + F.var_samp(ov) / F.count(ov)
+        )
+
+    obs = _permutation_observed(base, stat_obs=t_stat_agg())
+    rr = _permutation_p(base, obs, t_stat_agg, K).select(
         F.col("feat").alias(feature_col),
-        F.round("t_obs", 6).alias("t_stat"),
-        F.round("p_perm", 9).alias("p_perm"),
+        F.round("stat_obs", 6).alias("t_stat"),
+        "p_perm",
     )
     return bh_adjust(rr, "p_perm", [feature_col]).drop("rejected")
 
@@ -1568,32 +1607,15 @@ def sam_permutation_fdr(
     (:func:`_sam_s0`) computed from the OBSERVED per-feature moments
     (dimension-sized driver aggregation) and held FIXED across
     permutations, exactly as samr does. The label permutations, the
-    exceedance p and the BH pass reuse the conventions of
-    :func:`ttest_permutation_fdr` (deterministic lowbias32 ranking keyed
-    on (rid, k)), including its welch-mirrored degenerate-feature gate
-    (>1 non-null value per group). ``run_analysis(df, "samr", ...)``
-    routes here.
+    exceedance p and the degenerate-feature gate are the ones
+    :func:`ttest_permutation_fdr` runs (:func:`_permutation_p`,
+    :func:`_permutation_observed`), then BH. ``run_analysis(df, "samr",
+    ...)`` routes here.
 
     Output: (feature_col, s0, d_stat, p_perm, p_adj)."""
-    from .curation import split_u
-
-    K = int(permutations)
-    if K <= 0:
-        raise ValueError("sam_permutation_fdr: permutations must be > 0")
-    rid_type = dict(df.dtypes).get(rid_col)
-    if rid_type is None or not (
-        rid_type in ("tinyint", "smallint", "int", "bigint")
-        or rid_type.startswith("decimal")
-    ):
-        raise ValueError(
-            f"sam_permutation_fdr: rid_col {rid_col!r} must be an integer "
-            f"column (got {rid_type}); hash string ids first"
-        )
-    base = df.filter(F.col(group_col).isin([group_a, group_b])).select(
-        F.col(feature_col).alias("feat"),
-        F.col(rid_col).alias("rid"),
-        F.col(value_col).cast("double").alias("v"),
-        (F.col(group_col) == F.lit(group_a)).alias("is_f"),
+    K, base = _permutation_base(
+        df, feature_col, group_col, value_col, group_a, group_b, rid_col,
+        permutations, "sam_permutation_fdr",
     )
 
     def moments():
@@ -1612,22 +1634,10 @@ def sam_permutation_fdr(
             (n1 - 1) * F.var_samp(fv) + (n2 - 1) * F.var_samp(ov)
         ) / _nz(n1 + n2 - 2)
         s = F.sqrt((1.0 / _nz(n1) + 1.0 / _nz(n2)) * pooled)
-        return n1, n2, r, s
+        return r, s
 
-    n1e, n2e, re_, se = moments()
-    obs = (
-        base.groupBy("feat")
-        .agg(
-            F.sum(F.when(F.col("is_f"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n1"),
-            n1e.alias("n1v"),
-            n2e.alias("n2v"),
-            re_.alias("r"),
-            se.alias("s"),
-        )
-        .filter((F.col("n1v") > 1) & (F.col("n2v") > 1))
-    )
+    r, s = moments()
+    obs = _permutation_observed(base, r=r, s=s)
     if s0 is None:
         # the s0 selection and the d_obs plan both consume obs, and obs is
         # per-FEATURE (dimension-sized). Collect it once for the s0 scan
@@ -1639,67 +1649,22 @@ def sam_permutation_fdr(
         s0 = _sam_s0([row["s"] for row in rows], [row["r"] for row in rows])
         obs = df.sparkSession.createDataFrame(rows, obs.schema)
     s0 = float(s0)
-    # _nz: an all-constant feature with s0=0 has s+s0 == 0 — NULL (the
-    # documented untestable path) instead of an ANSI DIVIDE_BY_ZERO, and
-    # the filter drops it rather than emitting a spurious 1/(K+1) p.
+
+    def d_stat():
+        # _nz: an all-constant feature with s0=0 has s+s0 == 0 — NULL (the
+        # documented untestable path) instead of an ANSI DIVIDE_BY_ZERO
+        r, s = moments()
+        return r / _nz(s + F.lit(s0))
+
+    # the observed d is plain column math on obs; a NULL d_obs is dropped
+    # rather than emitted with a spurious 1/(K+1) p
     d_obs = obs.select(
-        "feat", "n1", (F.col("r") / _nz(F.col("s") + F.lit(s0))).alias("d_obs")
-    ).filter(F.col("d_obs").isNotNull())
-    # repartition-before-explode: see ttest_permutation_fdr — one N-row
-    # shuffle replaces the K*N-row exchange into the window, same plan
-    # shape, bit-identical results.
-    perm = (
-        base.repartition(F.col("feat"))
-        .select(
-            "feat", "rid", "v",
-            F.explode(F.sequence(F.lit(1), F.lit(K))).alias("k"),
-        )
-        .withColumn("u", split_u(F.col("rid") * 131 + F.col("k")))
-    )
-    w = Window.partitionBy("feat", "k").orderBy(
-        # v as the FINAL key: with duplicate rids (the synthetic
-        # lineitem has repeated (orderkey, linenumber) pairs) the
-        # (u, rid) pair ties across rows with DIFFERENT values and
-        # the rank — hence the label set and the statistic — becomes
-        # engine-nondeterministic; value-tied rows are the only
-        # remaining ties and swapping them cannot change any moment
-        F.col("u").asc(), F.col("rid").asc(), F.col("v").asc_nulls_first()
-    )
-    ranked = perm.select("feat", "v", "k", F.row_number().over(w).alias("rn"))
-    lab = ranked.join(F.broadcast(d_obs.select("feat", "n1")), "feat").select(
-        "feat", "k", "v", (F.col("rn") <= F.col("n1")).alias("is_f")
-    )
-    _n1k, _n2k, rk, sk = moments()
-    pt = lab.groupBy("feat", "k").agg(
-        (rk / _nz(sk + F.lit(s0))).alias("d_k")
-    )
-    # ROUNDED |d| comparison — see ttest_permutation_fdr: mathematically
-    # tied permutations must not be decided by float summation order
-    pp = (
-        d_obs.join(pt, "feat")
-        .groupBy("feat", "d_obs")
-        .agg(
-            (
-                (
-                    F.lit(1.0)
-                    + F.sum(
-                        F.when(
-                            F.round(F.abs(F.col("d_k")), 9)
-                            >= F.round(F.abs(F.col("d_obs")), 9),
-                            1,
-                        ).otherwise(0)
-                    )
-                )
-                / F.lit(float(K + 1))
-            ).alias("p_perm")
-        )
-    )
-    # BH on the ROUNDED p — see ttest_permutation_fdr: raw-float ranking
-    # flips tie blocks on ~1e-15 engine-arithmetic differences
-    rr = pp.select(
+        "feat", "n1", (F.col("r") / _nz(F.col("s") + F.lit(s0))).alias("stat_obs")
+    ).filter(F.col("stat_obs").isNotNull())
+    rr = _permutation_p(base, d_obs, d_stat, K).select(
         F.col("feat").alias(feature_col),
         F.round(F.lit(s0), 9).alias("s0"),
-        F.round("d_obs", 6).alias("d_stat"),
-        F.round("p_perm", 9).alias("p_perm"),
+        F.round("stat_obs", 6).alias("d_stat"),
+        "p_perm",
     )
     return bh_adjust(rr, "p_perm", [feature_col]).drop("rejected")

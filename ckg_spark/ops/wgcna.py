@@ -363,7 +363,6 @@ def module_eigengenes(
     n_iter: int = 40,
     min_n: int = 3,
     include_grey: bool = False,
-    weights_path: str = "auto",
     driver_max_edges: int = 200_000,
     corr: DataFrame | None = None,
 ) -> DataFrame:
@@ -377,7 +376,8 @@ def module_eigengenes(
 
     Scale split: eigenvector weights live on the feature dimension
     (driver short-circuit under ``driver_max_edges``, identical
-    distributed recurrence above it); the sample-side score is ONE
+    distributed recurrence above it; pass ``driver_max_edges=0`` to force
+    the distributed path); the sample-side score is ONE
     broadcast join + ONE aggregation pass — samples never collect."""
     spark = df.sparkSession
     mods = modules if include_grey else modules.filter(F.col("module") != GREY)
@@ -419,20 +419,13 @@ def module_eigengenes(
         .filter(F.col("module") == F.col("module2"))
         .select("module", "node1", "node2", F.col("weight").alias("r"))
     )
-    rows = None
-    if weights_path == "auto":
-        # pin before the limit-probe: CollectLimit over the raw TOM/corr
-        # plan would execute its final stage incrementally (near-serial
-        # on an expensive upstream — same lesson as canon/cc.py)
-        medges = medges.localCheckpoint(eager=True)
-        probe = medges.limit(driver_max_edges + 1).collect()
-        if len(probe) <= driver_max_edges:
-            weights_path, rows = "driver", probe  # probe WAS the evaluation
-        else:
-            weights_path = "distributed"
-    if weights_path == "driver":
-        if rows is None:
-            rows = medges.collect()
+    # pin before the limit-probe: CollectLimit over the raw TOM/corr plan
+    # would execute its final stage incrementally (near-serial on an
+    # expensive upstream — same lesson as canon/cc.py)
+    medges = medges.localCheckpoint(eager=True)
+    rows = medges.limit(driver_max_edges + 1).collect()
+    if len(rows) <= driver_max_edges:
+        # the probe WAS the evaluation
         members = mods.collect()
         by_mod: dict[str, list] = {}
         feats_by_mod: dict[str, list] = {}
@@ -445,10 +438,8 @@ def module_eigengenes(
             wmap = _pc1_weights_driver(feats, by_mod.get(mod, []), n_iter)
             out.extend((mod, f, w) for f, w in wmap.items())
         weights = spark.createDataFrame(out, "module string, feature string, w double")
-    elif weights_path == "distributed":
-        weights = _pc1_weights_distributed(spark, medges, mods, n_iter)
     else:
-        raise ValueError(f"unknown weights_path {weights_path!r}")
+        weights = _pc1_weights_distributed(spark, medges, mods, n_iter)
     scored = (
         z.join(F.broadcast(weights), ["module", "feature"])
         .groupBy("sample", "module")

@@ -1992,28 +1992,21 @@ def q_pairwise_ttest_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     family="stats",
 )
 def q_median_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group EXACT median centering via applyInPandas (grouped-map
-    pandas UDF — the §2.10 pattern for per-group normalization,
-    analytics.py:375-391). Exact medians so the DuckDB MEDIAN() window
-    oracle matches bit-for-bit (percentile_approx would not)."""
-    import pandas as pd
+    """Per-group EXACT median centering (normalization_median,
+    analytics.py:375-391) through run_analysis('normalization',
+    {'method': 'median'}): an exact-percentile window, so the DuckDB
+    MEDIAN() window oracle matches bit-for-bit (percentile_approx would
+    not), rounded engine-side like the oracle."""
+    from ..analysis import run_analysis
 
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_orderkey", "l_linenumber", "l_extendedprice"
+    li = _t(spark, sf_dir, "lineitem")
+    out = run_analysis(
+        li,
+        "normalization",
+        {"method": "median", "value_col": "l_extendedprice", "sample_col": "l_returnflag"},
     )
-
-    def center(pdf: pd.DataFrame) -> pd.DataFrame:
-        med = pdf["l_extendedprice"].median()
-        return pd.DataFrame(
-            {
-                "l_orderkey": pdf["l_orderkey"],
-                "l_linenumber": pdf["l_linenumber"],
-                "price_centered": (pdf["l_extendedprice"] - med).round(6),
-            }
-        )
-
-    return li.groupBy("l_returnflag").applyInPandas(
-        center, "l_orderkey long, l_linenumber long, price_centered double"
+    return out.select(
+        "l_orderkey", "l_linenumber", F.col("value_norm").alias("price_centered")
     )
 
 
@@ -3178,26 +3171,30 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_l2_normalize",
     """
+    WITH e AS (
+      SELECT event_id, user_id, CAST(value AS DOUBLE) AS v,
+             SQRT(SUM(CAST(value AS DOUBLE) * CAST(value AS DOUBLE))
+                  OVER (PARTITION BY user_id)) AS nrm
+      FROM events
+    )
     SELECT event_id, user_id,
-           CAST(ROUND(CAST(value AS DOUBLE)
-             / SQRT(SUM(CAST(value AS DOUBLE) * CAST(value AS DOUBLE))
-                    OVER (PARTITION BY user_id)), 6) AS DOUBLE) AS value_norm
-    FROM events
+           CAST(ROUND(CASE WHEN nrm > 0 THEN v / nrm ELSE v END, 6) AS DOUBLE) AS value_norm
+    FROM e
     """,
     family="stats",
 )
 def q_l2_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-subject l2 normalization (normalization_linear, analytics.py:
-    459-477 'l2' branch): each user's readings divided by their vector
-    norm. Pure window column math."""
+    459-477 'l2' branch) through run_analysis('normalization',
+    {'method': 'l2'}): each user's readings divided by their vector
+    norm; an all-zero user keeps its zeros. Pure window column math."""
+    from ..analysis import run_analysis
+
     e = _t(spark, sf_dir, "events")
-    v = F.col("value").cast("double")
-    w = Window.partitionBy("user_id")
-    return e.select(
-        "event_id",
-        "user_id",
-        F.round(v / F.sqrt(F.sum(v * v).over(w)), 6).alias("value_norm"),
+    out = run_analysis(
+        e, "normalization", {"method": "l2", "value_col": "value", "sample_col": "user_id"}
     )
+    return out.select("event_id", "user_id", "value_norm")
 
 
 @register(
@@ -3317,15 +3314,65 @@ def q_kg_eigenvector(spark: SparkSession, sf_dir: str) -> DataFrame:
     return x.select(F.col("id").alias("term_id"), F.round("val", 6).alias("centrality"))
 
 
-def _perm_fdr_sql() -> str:
+def _permutation_sql(K: int, obs: str, stat_k: str) -> str:
+    """The label-permutation CTEs both permutation-FDR twins share — the
+    DuckDB spelling of ops/stats.py::_permutation_p, then BH. Reads
+    ``base`` (feat, rid, v, is_f) and the CTE named ``obs`` (feat, n1,
+    stat_obs) of gated features; ``stat_k`` is the per-(feat, k) SELECT
+    over ``lab`` yielding (feat, k, stat_k). Ends in ``bh`` (feat,
+    stat_obs, p_perm, p_adj)."""
     from ..ops.curation import split_u_sql
 
+    u = split_u_sql("(b.rid * 131 + t.k)")
+    return f"""perm AS (
+      SELECT b.feat, b.rid, b.v, t.k, {u} AS u
+      FROM base b, UNNEST(generate_series(1, {K})) AS t(k)
+    ),
+    ranked AS (
+      SELECT feat, v, k,
+             ROW_NUMBER() OVER (PARTITION BY feat, k ORDER BY u ASC, rid ASC, v ASC NULLS FIRST) AS rn
+      FROM perm
+    ),
+    lab AS (
+      SELECT r.feat, r.k, r.v, (r.rn <= o.n1) AS is_f
+      FROM ranked r JOIN {obs} o ON r.feat = o.feat
+    ),
+    pt AS ({stat_k}),
+    pp AS (
+      -- CAST AS DOUBLE: DuckDB would otherwise carry exact DECIMALs
+      -- through (1+c)/(K+1) and the BH arithmetic, and with the heavy
+      -- p-value ties of a permutation test the tail-min flips blocks on
+      -- ~1e-15 decimal-vs-double differences
+      SELECT o.feat, o.stat_obs,
+             CAST(1.0 + SUM(CASE WHEN ROUND(ABS(p.stat_k), 9) >= ROUND(ABS(o.stat_obs), 9) THEN 1 ELSE 0 END) AS DOUBLE) / {float(K + 1)} AS p_perm
+      FROM {obs} o JOIN pt p ON p.feat = o.feat
+      GROUP BY o.feat, o.stat_obs
+    ),
+    rr AS (
+      -- rank + BH on the ROUNDED p (fixed function of the integer
+      -- exceedance count => bit-identical to Spark); raw-float ranking
+      -- flips tie blocks on ~1e-15 engine-arithmetic differences
+      SELECT feat, stat_obs, CAST(ROUND(p_perm, 9) AS DOUBLE) AS p_perm,
+             ROW_NUMBER() OVER (ORDER BY ROUND(p_perm, 9) ASC, feat ASC) AS rn,
+             COUNT(*) OVER () AS m
+      FROM pp
+    ),
+    bh AS (
+      SELECT feat, stat_obs, p_perm,
+             CAST(ROUND(LEAST(1.0, MIN((p_perm * m) / rn) OVER
+               (ORDER BY rn DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 9)
+               AS DOUBLE) AS p_adj
+      FROM rr
+    )"""
+
+
+def _perm_fdr_sql() -> str:
     t_expr = (
         "((AVG(CASE WHEN is_f THEN v END) - AVG(CASE WHEN NOT is_f THEN v END))"
-        " / SQRT(VAR_SAMP(CASE WHEN is_f THEN v END) / COUNT(CASE WHEN is_f THEN 1 END)"
-        " + VAR_SAMP(CASE WHEN NOT is_f THEN v END) / COUNT(CASE WHEN NOT is_f THEN 1 END)))"
+        " / SQRT(VAR_SAMP(CASE WHEN is_f THEN v END) / COUNT(CASE WHEN is_f THEN v END)"
+        " + VAR_SAMP(CASE WHEN NOT is_f THEN v END) / COUNT(CASE WHEN NOT is_f THEN v END)))"
     )
-    u = split_u_sql("(b.rid * 131 + t.k)")
+    pt = f"SELECT feat, k, {t_expr} AS stat_k FROM lab GROUP BY feat, k"
     return f"""
     WITH base AS (
       SELECT l_returnflag AS feat,
@@ -3334,52 +3381,18 @@ def _perm_fdr_sql() -> str:
              (l_linestatus = 'F') AS is_f
       FROM lineitem WHERE l_linestatus IN ('F', 'O')
     ),
-    cnt AS (
+    obs AS (
       -- welch-mirrored emission gate: >1 non-null value in BOTH groups
       -- (n1 itself stays the raw group-a row count for label blocks)
-      SELECT feat, CAST(SUM(CASE WHEN is_f THEN 1 ELSE 0 END) AS BIGINT) AS n1
+      SELECT feat, CAST(SUM(CASE WHEN is_f THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+             {t_expr} AS stat_obs
       FROM base GROUP BY feat
       HAVING COUNT(CASE WHEN is_f THEN v END) > 1
          AND COUNT(CASE WHEN NOT is_f THEN v END) > 1
     ),
-    obs AS (SELECT feat, {t_expr} AS t_obs FROM base GROUP BY feat),
-    perm AS (
-      SELECT b.feat, b.rid, b.v, t.k, {u} AS u
-      FROM base b, UNNEST(generate_series(1, 20)) AS t(k)
-    ),
-    ranked AS (
-      SELECT feat, v, k,
-             ROW_NUMBER() OVER (PARTITION BY feat, k ORDER BY u ASC, rid ASC, v ASC NULLS FIRST) AS rn
-      FROM perm
-    ),
-    lab AS (
-      SELECT r.feat, r.k, r.v, (r.rn <= c.n1) AS is_f
-      FROM ranked r JOIN cnt c ON r.feat = c.feat
-    ),
-    pt AS (SELECT feat, k, {t_expr} AS t_k FROM lab GROUP BY feat, k),
-    pp AS (
-      -- DOUBLE, not DuckDB's exact DECIMAL: with tied permutation
-      -- p-values the BH tail-min flips blocks on decimal-vs-double
-      -- ~1e-15 differences (found via q_samr's 997-feature ties)
-      SELECT o.feat, o.t_obs,
-             CAST(1.0 + SUM(CASE WHEN ROUND(ABS(p.t_k), 9) >= ROUND(ABS(o.t_obs), 9) THEN 1 ELSE 0 END) AS DOUBLE) / 21.0 AS p_perm
-      FROM obs o JOIN pt p ON p.feat = o.feat
-      GROUP BY o.feat, o.t_obs
-    ),
-    rr AS (
-      -- rank + BH on the ROUNDED p — see q_samr's twin for why
-      SELECT feat, t_obs, CAST(ROUND(p_perm, 9) AS DOUBLE) AS p_perm,
-             ROW_NUMBER() OVER (ORDER BY ROUND(p_perm, 9) ASC, feat ASC) AS rn,
-             COUNT(*) OVER () AS m
-      FROM pp
-    )
-    SELECT feat AS l_returnflag,
-           CAST(ROUND(t_obs, 6) AS DOUBLE) AS t_stat,
-           p_perm,
-           CAST(ROUND(LEAST(1.0, MIN((p_perm * m) / rn) OVER
-             (ORDER BY rn DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 9)
-             AS DOUBLE) AS p_adj
-    FROM rr
+    {_permutation_sql(20, "obs", pt)}
+    SELECT feat AS l_returnflag, CAST(ROUND(stat_obs, 6) AS DOUBLE) AS t_stat, p_perm, p_adj
+    FROM bh
     """
 
 
@@ -3426,9 +3439,6 @@ def q_ttest_permutation_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _samr_sql() -> str:
-    from ..ops.curation import split_u_sql
-
-    u = split_u_sql("(b.rid * 131 + t.k)")
     cand_list = ", ".join(str(i / 20.0) for i in range(21))
     br_list = ", ".join(str(i / 100.0) for i in range(101))
     mom = (
@@ -3439,6 +3449,10 @@ def _samr_sql() -> str:
         " * ((COUNT(CASE WHEN is_f THEN v END)-1)*VAR_SAMP(CASE WHEN is_f THEN v END)"
         "    + (COUNT(CASE WHEN NOT is_f THEN v END)-1)*VAR_SAMP(CASE WHEN NOT is_f THEN v END))"
         " / (COUNT(CASE WHEN is_f THEN v END)+COUNT(CASE WHEN NOT is_f THEN v END)-2)) AS s"
+    )
+    pt = (
+        "SELECT x.feat, x.k, x.r / NULLIF(x.s + s0t.s0v, 0) AS stat_k"
+        f" FROM (SELECT feat, k, {mom} FROM lab GROUP BY feat, k) AS x, s0t"
     )
     return f"""
     WITH base AS (
@@ -3471,55 +3485,17 @@ def _samr_sql() -> str:
     ),
     s0t AS (SELECT s0c AS s0v FROM cv ORDER BY cvv ASC, s0c ASC LIMIT 1),
     dobs AS (
-      SELECT feat, n1, d_obs FROM (
-        SELECT f.feat, f.n1, f.r / NULLIF(f.s + s0t.s0v, 0) AS d_obs
+      SELECT feat, n1, stat_obs FROM (
+        SELECT f.feat, f.n1, f.r / NULLIF(f.s + s0t.s0v, 0) AS stat_obs
         FROM fw f, s0t
-      ) WHERE d_obs IS NOT NULL
+      ) WHERE stat_obs IS NOT NULL
     ),
-    perm AS (
-      SELECT b.feat, b.rid, b.v, t.k, {u} AS u
-      FROM base b, UNNEST(generate_series(1, 10)) AS t(k)
-    ),
-    ranked AS (
-      SELECT feat, v, k,
-             ROW_NUMBER() OVER (PARTITION BY feat, k ORDER BY u ASC, rid ASC, v ASC NULLS FIRST) AS rn
-      FROM perm
-    ),
-    lab AS (
-      SELECT r.feat, r.k, r.v, (r.rn <= d.n1) AS is_f
-      FROM ranked r JOIN dobs d ON r.feat = d.feat
-    ),
-    pt AS (
-      SELECT x.feat, x.k, x.r / NULLIF(x.s + s0t.s0v, 0) AS d_k
-      FROM (SELECT feat, k, {mom} FROM lab GROUP BY feat, k) AS x, s0t
-    ),
-    pp AS (
-      -- CAST AS DOUBLE: DuckDB would otherwise carry exact DECIMALs
-      -- through (1+c)/11 and the BH arithmetic, and with the heavy
-      -- p-value ties of a permutation test the tail-min flips blocks on
-      -- ~1e-15 decimal-vs-double differences
-      SELECT o.feat, o.d_obs,
-             CAST(1.0 + SUM(CASE WHEN ROUND(ABS(p.d_k), 9) >= ROUND(ABS(o.d_obs), 9) THEN 1 ELSE 0 END) AS DOUBLE) / 11.0 AS p_perm
-      FROM dobs o JOIN pt p ON p.feat = o.feat
-      GROUP BY o.feat, o.d_obs
-    ),
-    rr AS (
-      -- rank + BH on the ROUNDED p (fixed function of the integer
-      -- exceedance count => bit-identical to Spark); raw-float ranking
-      -- flips tie blocks on ~1e-15 engine-arithmetic differences
-      SELECT feat, d_obs, CAST(ROUND(p_perm, 9) AS DOUBLE) AS p_perm,
-             ROW_NUMBER() OVER (ORDER BY ROUND(p_perm, 9) ASC, feat ASC) AS rn,
-             COUNT(*) OVER () AS m
-      FROM pp
-    )
+    {_permutation_sql(10, "dobs", pt)}
     SELECT CAST(feat AS BIGINT) AS feat,
            CAST(ROUND((SELECT s0v FROM s0t), 9) AS DOUBLE) AS s0,
-           CAST(ROUND(d_obs, 6) AS DOUBLE) AS d_stat,
-           p_perm,
-           CAST(ROUND(LEAST(1.0, MIN((p_perm * m) / rn) OVER
-             (ORDER BY rn DESC ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 9)
-             AS DOUBLE) AS p_adj
-    FROM rr
+           CAST(ROUND(stat_obs, 6) AS DOUBLE) AS d_stat,
+           p_perm, p_adj
+    FROM bh
     """
 
 

@@ -73,6 +73,15 @@ def get_spark(
         shuffle_partitions = int(
             os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cores, 8)))
         )
+    # local mode puts driver + all executor threads in ONE JVM: size the
+    # heap for the whole node (~1 GB/core, 16 GB floor), not a driver alone
+    # — 8g starved 32 task threads into GCLocker retry failures at 500k
+    # docs. On a real cluster this maps to executor memory instead.
+    # ParallelGC keeps the heap it grows, so the default never exceeds
+    # three quarters of physical memory (a 16g heap on a 16 GB host grew
+    # the JVM to 12.7 GB RSS); SPARK_GRAFT_DRIVER_MEM overrides.
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    heap_mb = min(max(16, cores) * 1024, phys_mb * 3 // 4)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
@@ -115,13 +124,9 @@ def get_spark(
         )
         .config("spark.sql.files.openCostInBytes", str(64 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        # local mode puts driver + all executor threads in ONE JVM: size the
-        # heap for the whole node (~1 GB/core floor), not a driver alone —
-        # 8g starved 32 task threads into GCLocker retry failures at 500k
-        # docs. On a real cluster this maps to executor memory instead.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{max(16, cores)}g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{heap_mb}m"),
         )
         .config("spark.driver.defaultJavaOptions", JVM_OPTIONS)
         .config("spark.ui.enabled", "false")

@@ -1462,15 +1462,18 @@ def test_ttest_permutation_drops_degenerate_features(spark):
     assert r["p_adj"] == pytest.approx(min(1.0, r["p_perm"]), abs=1e-9)
 
 
-def test_ttest_permutation_rejects_non_numeric_rid(spark):
-    from ckg_spark.ops.stats import ttest_permutation_fdr
+@pytest.mark.parametrize("op", ["ttest_permutation_fdr", "sam_permutation_fdr"])
+def test_permutation_rejects_non_numeric_rid(spark, op):
+    """Both permutation operators refuse a string rid up front instead of
+    failing at action time deep in the plan."""
+    from ckg_spark.ops import stats
 
     df = spark.createDataFrame(
         [("f1", "r1", 1.0, "a"), ("f1", "r2", 2.0, "b")],
         "feat string, rid string, v double, g string",
     )
-    with pytest.raises(ValueError, match="integer column"):
-        ttest_permutation_fdr(df, "feat", "g", "v", "a", "b", "rid", 5)
+    with pytest.raises(ValueError, match=f"{op}: rid_col 'rid' must be an integer column"):
+        getattr(stats, op)(df, "feat", "g", "v", "a", "b", "rid", 5)
 
 
 def _sam_reference(values_by_feat, s0):

@@ -115,3 +115,69 @@ def test_driver_window_invariants():
         assert required in _DRIVER_WINDOW
     assert list(spark_queries())[:50] == _DRIVER_WINDOW
     assert len(spark_queries()) == len(CATALOG)
+
+
+def _query_and_twin(spark, name, tmp_path, tables):
+    """Run catalog query ``name`` and its DuckDB twin over tiny tables
+    written to ``tmp_path`` (table name -> pandas frame); sorted rows."""
+    con = duckdb.connect()
+    for t, pdf in tables.items():
+        pdf.to_parquet(tmp_path / f"{t}.parquet")
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'")
+    spec = CATALOG[name]
+    got = sorted(tuple(r) for r in spec.spark_fn(spark, str(tmp_path)).collect())
+    exp = sorted(con.execute(spec.sql).fetchall())
+    con.close()
+    return got, exp
+
+
+def test_l2_normalize_keeps_an_all_zero_user(spark, tmp_path):
+    """A user whose readings are all 0 has a zero norm: the query keeps the
+    zeros (the raw division throws DIVIDE_BY_ZERO under ANSI) and the twin
+    mirrors the guard."""
+    import pandas as pd
+
+    events = pd.DataFrame(
+        {"event_id": [1, 2, 3, 4], "user_id": [1, 1, 2, 2], "value": [3.0, 4.0, 0.0, 0.0]}
+    )
+    got, exp = _query_and_twin(spark, "q_l2_normalize", tmp_path, {"events": events})
+    assert got == exp == [(1, 1, 0.6), (2, 1, 0.8), (3, 2, 0.0), (4, 2, 0.0)]
+
+
+def test_median_normalize_rounds_half_away_like_its_twin(spark, tmp_path):
+    """-0.0078125 is an exact binary tie at the 6th decimal: Spark and DuckDB
+    ROUND take it away from zero, Python's half-even round would not."""
+    import pandas as pd
+
+    lineitem = pd.DataFrame(
+        {
+            "l_orderkey": [1, 1, 1],
+            "l_linenumber": [1, 2, 3],
+            "l_extendedprice": [0.0, 0.0078125, 1.0],
+            "l_returnflag": ["A", "A", "A"],
+        }
+    )
+    got, exp = _query_and_twin(spark, "q_median_normalize", tmp_path, {"lineitem": lineitem})
+    assert got == exp == [(1, 1, -0.007813), (1, 2, 0.0), (1, 3, 0.992188)]
+
+
+def test_ttest_permutation_twin_counts_non_null_values(spark, tmp_path):
+    """The Welch t divides each group's variance by its NON-NULL value
+    count; with null readings in both groups the twin must count values,
+    not rows, to match."""
+    import pandas as pd
+
+    q = [1.0, 2.0, 4.0, None, 7.0, 3.0, 5.0, 6.0, 8.0, None, 9.0]
+    lineitem = pd.DataFrame(
+        {
+            "l_orderkey": list(range(1, 12)),
+            "l_linenumber": [1] * 11,
+            "l_quantity": q,
+            "l_returnflag": ["A"] * 11,
+            "l_linestatus": ["F"] * 5 + ["O"] * 6,
+        }
+    )
+    got, exp = _query_and_twin(
+        spark, "q_ttest_permutation_fdr", tmp_path, {"lineitem": lineitem}
+    )
+    assert len(got) == 1 and got == exp

@@ -57,7 +57,6 @@ KEEP = {
     "ops.textstats.doc_stats": "per-document text statistics operator",
     "ops.cluster.linkage_matrix": "scipy-format dendrogram export of the MST clustering",
     "ops.multimodal.frame_sample_plan": "video frame-sampling plan operator",
-    "ops.simsearch.ivf_topk": "IVF top-k over an in-memory frame (the catalog runs the pruned variant)",
     "sources.readers.read_xml_records": "XML source reader",
     "sources.readers.read_excel": "Excel source reader",
     "sources.readers.obo_hierarchy_df": "multi-parent OBO hierarchy reader",

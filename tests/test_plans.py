@@ -190,6 +190,40 @@ def test_ivf_assignment_no_shuffle_and_probe_prunes(spark, tmp_path):
     assert probe.count() == 5
 
 
+@pytest.mark.parametrize("op", ["ttest_permutation_fdr", "sam_permutation_fdr"])
+def test_permutation_explode_sits_above_one_feat_exchange(spark, op):
+    """Both permutation operators shuffle the N input rows by feat BEFORE
+    the K-way explode: in the physical plan the one Generate has exactly
+    one Exchange below it, a hash partitioning on feat, and none between
+    it and the rank window above it, so the K*N exploded rows never
+    shuffle."""
+    from ckg_spark.ops import stats
+
+    rows = [(f"f{i % 3}", i, float(i % 7), "a" if i % 2 else "b") for i in range(60)]
+    df = spark.createDataFrame(rows, "feat string, rid bigint, v double, g string")
+    extra = {"s0": 0.5} if op == "sam_permutation_fdr" else {}
+    out = getattr(stats, op)(df, "feat", "g", "v", "a", "b", "rid", 5, **extra)
+    plan = out._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.inputPlan()
+
+    def walk(node, above):
+        yield node, above
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i), above + [node])
+
+    gens = [(n, above) for n, above in walk(plan, []) if n.nodeName() == "Generate"]
+    assert len(gens) == 1
+    gen, above = gens[0]
+    below = [n.simpleString(20) for n, _ in walk(gen, []) if "Exchange" in n.nodeName()]
+    assert len(below) == 1 and below[0].startswith("Exchange hashpartitioning(feat#"), below
+    names = [n.nodeName() for n in reversed(above)]
+    assert "Window" in names
+    assert not any("Exchange" in n for n in names[: names.index("Window")]), names
+    assert out.count() == 3
+
+
 def test_stats_pack_plans_stay_jvm_side(spark):
     """Every p-value in the statistics pack evaluates as JVM column math
     (the dual-backend continued fractions) — no Arrow/Python evaluator may

@@ -230,11 +230,11 @@ def test_eigengene_paths_agree(spark, planted):
         df, "sample", "feature", "value", power=6, tom_cutoff=0.05, min_module_size=2
     )
     d = _collect_eigengenes(
-        wgcna.module_eigengenes(df, mods, "sample", "feature", "value", weights_path="driver")
+        wgcna.module_eigengenes(df, mods, "sample", "feature", "value")
     )
     x = _collect_eigengenes(
         wgcna.module_eigengenes(
-            df, mods, "sample", "feature", "value", weights_path="distributed"
+            df, mods, "sample", "feature", "value", driver_max_edges=0
         )
     )
     assert set(d) == set(x)
