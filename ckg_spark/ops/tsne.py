@@ -19,6 +19,11 @@ Differences vs the reference's wrappers, stated plainly:
   descent), so tests can assert bitwise reproducibility. The gradient
   schedule mirrors van der Maaten's reference implementation: early
   exaggeration ×12 for 250 iterations, momentum 0.5→0.8, adaptive gains.
+- The gradient convention is bhtsne's exact gradient
+  (``computeExactGradient``): Σ_j (p_ij − q_ij)(1 + |y_i − y_j|²)⁻¹
+  (y_i − y_j), without the analytic factor 4, so ``learning_rate=200``
+  is bhtsne's ``eta``. sklearn's ``TSNE(learning_rate=200)``, which
+  run_tsne wraps, keeps the factor 4 and so steps 4× as far.
 - umap-learn optimizes the fuzzy-graph cross-entropy by negative-sampled
   SGD (numba); at dimension scale the FULL-BATCH gradient of the same
   objective is affordable and deterministic, so that is what runs here,
@@ -118,7 +123,9 @@ def tsne_core(
         np.fill_diagonal(num, 0.0)
         q = np.maximum(num / max(num.sum(), _EPS), _EPS)
         w = (pe - q) * num
-        grad = 4.0 * ((np.diag(w.sum(axis=1)) - w) @ y)
+        # bhtsne's convention, no factor 4 (module docstring): with it,
+        # eta=200 takes 4x bhtsne's step and the layout overshoots
+        grad = (np.diag(w.sum(axis=1)) - w) @ y
         same_sign = np.sign(grad) == np.sign(vel)
         gains = np.where(same_sign, gains * 0.8, gains + 0.2)
         gains = np.maximum(gains, 0.01)
